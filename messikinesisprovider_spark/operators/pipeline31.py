@@ -142,8 +142,16 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # inheritable_thread_target copies the caller's local properties (job
+    # group, scheduler pool) and session tags into each worker: under pinned
+    # threads a plain pool thread starts with none, so a host cancelling by
+    # job group or tag would miss these eager jobs
     with ThreadPoolExecutor(max_workers=3) as pool:
-        q_r, q_f, q_m = pool.map(quartile, ["r_q", "f_q", "m_q"])
+        q_r, q_f, q_m = pool.map(
+            inheritable_thread_target(spark)(quartile), ["r_q", "f_q", "m_q"]
+        )
     return (
         rfm.join(q_r, "custkey")
         .join(q_f, "custkey")

@@ -97,11 +97,6 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At warehouse scale this is the materialized normalized-embedding table.
     e = e.persist()
     sigs = e.select("vec_id", F.expr(_sig_expr_spark()).alias("sig"))
-    # Persist the slim (vec_id, chunk, bucket) index: the self-join would
-    # otherwise evaluate the ~900-node signature expression on BOTH sides
-    # (the expression is too wide for whole-stage codegen, so each pass is
-    # interpreted — measured 2.0 s -> 0.8 s for candidate generation at
-    # sf0.1). At warehouse scale this is the stored LSH index table.
     chunks = sigs.select(
         "vec_id",
         F.posexplode(
@@ -125,9 +120,12 @@ def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-dst; e outgrows the broadcast threshold with the corpus). A pair
     # colliding in k<=4 chunks is scored k times before the distinct — that
     # bounded extra fold CPU buys removing two pair-table exchanges.
-    # The persisted ch is the materialized (LSH index ⋈ normalized vector)
-    # table both self-join sides read (the sig expression is too wide for
-    # codegen, so unpersisted it would be interpreted twice).
+    # Persist ch, the materialized (LSH index ⋈ normalized vector) table
+    # both self-join sides read: unpersisted, each side would evaluate the
+    # ~900-node signature expression, which is too wide for whole-stage
+    # codegen and so runs interpreted (persisting the signature-derived
+    # index measured 2.0 s -> 0.8 s for candidate generation at sf0.1).
+    # At warehouse scale this is the stored LSH index table.
     ch = (
         chunks.join(e, "vec_id")
         .select("vec_id", "c", "cv", "v", "nrm")

@@ -24,6 +24,7 @@ mapped from the cursor types P1-P4); nothing downstream changes.
 
 from __future__ import annotations
 
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,7 +47,10 @@ def stream_log(
     the others become monotone stream filters — pushed into the scan.
     `files_per_trigger` is the microbatch admission knob; topologies whose
     semantics depend on pass == batch (watermark-boundary audits) raise it
-    so one availableNow pass is exactly one batch.
+    so one availableNow pass is exactly one batch. Build the frame after
+    the first file lands: the `shard_id` partition column is inferred from
+    the files present when it is created (over an empty root, shard_id
+    becomes a data column and the drain fails to encode rows).
     """
     df = (
         spark.readStream.schema(LOG_SCHEMA)
@@ -128,20 +132,45 @@ def session_windows(
 
 
 def run_available_now(
-    stream_df: DataFrame, checkpoint_dir: str, out_table: str, output_mode: str = "append"
+    stream_df: DataFrame,
+    checkpoint_dir: str | None = None,
+    *,
+    table: str | None = None,
+    path: str | None = None,
+    foreach_batch=None,
+    output_mode: str = "append",
 ):
-    """Drain everything currently in the log into an in-memory table and stop
-    — the batch-test harness for streaming topologies (Trigger.AvailableNow,
-    the analog of the reference's backfill mode F3). Aggregations use
-    output_mode="complete" so unclosed windows are still observable."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode(output_mode)
-        .start()
+    """Drain everything currently in the source and stop (Trigger.AvailableNow,
+    the analog of the reference's backfill mode F3) — the one place the
+    package starts and waits for a drain.
+
+    Exactly one sink: `table` (in-memory table of that name), `path` (parquet
+    file sink) or `foreach_batch` (a `(batch_df, batch_id)` callback).
+    Aggregations into a table use output_mode="complete" so unclosed windows
+    are still observable. Blocks until the drain ends and returns the
+    stopped query, whose `recentProgress` holds this run's microbatches.
+    Without `checkpoint_dir` the checkpoint is a scratch dir removed when the
+    drain returns; multi-pass protocols pass one dir to every pass. Sets no
+    job group or description: callers' own tags attribute the jobs.
+    """
+    if sum(s is not None for s in (table, path, foreach_batch)) != 1:
+        raise ValueError("exactly one of table, path, foreach_batch")
+    if checkpoint_dir is None:
+        with tempfile.TemporaryDirectory(prefix="drain_ckpt_") as ckpt:
+            return run_available_now(
+                stream_df, ckpt, table=table, path=path,
+                foreach_batch=foreach_batch, output_mode=output_mode,
+            )
+    w = stream_df.writeStream.option("checkpointLocation", checkpoint_dir).outputMode(
+        output_mode
     )
+    if table is not None:
+        w = w.format("memory").queryName(table)
+    elif path is not None:
+        w = w.format("parquet").option("path", path)
+    else:
+        w = w.foreachBatch(foreach_batch)
+    q = w.trigger(availableNow=True).start()
     q.awaitTermination()
     return q
 

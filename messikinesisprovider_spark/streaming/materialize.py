@@ -15,9 +15,11 @@ sequence, not arrival, so reprocessing a batch converges to the same state
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from .consume import run_available_now
 
 
 def latest_per_key(
@@ -49,11 +51,8 @@ def upsert_snapshot(
     key: str = "external_id",
     order_cols: tuple[str, ...] | None = None,
 ):
-    """Start a streaming query maintaining `snapshot_dir` as latest-per-key.
-
-    Returns the StreamingQuery. Use trigger availableNow + awaitTermination
-    in batch-drain tests.
-    """
+    """Drain `stream_df` (availableNow) into `snapshot_dir` as latest-per-key
+    and return the stopped query."""
     spark = stream_df.sparkSession
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -93,12 +92,7 @@ def upsert_snapshot(
             shutil.rmtree(snapshot_dir)
         os.rename(staged, snapshot_dir)
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(stream_df, checkpoint_dir, foreach_batch=merge)
 
 
 def scd2_maintain(
@@ -107,7 +101,8 @@ def scd2_maintain(
     checkpoint_dir: str,
     tier_band: int = 50,
 ):
-    """Start a streaming query maintaining an SCD2 version table.
+    """Drain `stream_df` (availableNow) into an SCD2 version table under
+    `state_dir` and return the stopped query.
 
     The incremental-warehouse pattern executed as a topology (the batch
     twin is ``operators.pipeline17.scd2_incremental_merge``): per
@@ -192,9 +187,4 @@ def scd2_maintain(
             merged = recomputed
         _swap(merged, versions_dir)
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(stream_df, checkpoint_dir, foreach_batch=merge)

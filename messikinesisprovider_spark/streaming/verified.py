@@ -43,6 +43,11 @@ def pk_decode(col):
     )
 
 
+def _table(prefix: str) -> str:
+    """A fresh memory-sink table name (queries run more than once)."""
+    return prefix + "_" + uuid.uuid4().hex[:10]
+
+
 def _staged_events_log(spark: SparkSession, sf_dir: str) -> str:
     """Ingest events into a log directory once per session+sf."""
     key = (id(spark), sf_dir)
@@ -96,17 +101,8 @@ def streaming_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_messages"))
         .select(F.col("w.start").alias("window_start"), "n_messages")
     )
-    name = "stb_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="stb_ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    q = consume.run_available_now(agg, table=_table("stb"), output_mode="complete")
+    return spark.table(q.name)
 
 
 @register(
@@ -122,18 +118,8 @@ def streaming_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _staged_events_log(spark, sf_dir)
     deduped = consume.effectively_once(consume.stream_log(spark, root), watermark="10 minutes")
-    name = "sdc_" + uuid.uuid4().hex[:10]
-    q = (
-        deduped.select("ulid")
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sdc_ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).agg(F.count(F.lit(1)).alias("n_unique_messages"))
+    q = consume.run_available_now(deduped.select("ulid"), table=_table("sdc"))
+    return spark.table(q.name).agg(F.count(F.lit(1)).alias("n_unique_messages"))
 
 
 @register(
@@ -188,17 +174,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "ssw_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ssw_ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    q = consume.run_available_now(agg, table=_table("ssw"), output_mode="complete")
+    return spark.table(q.name)
 
 
 @register(
@@ -241,14 +218,5 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = enriched.groupBy("segment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    name = "sej_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sej_ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    q = consume.run_available_now(agg, table=_table("sej"), output_mode="complete")
+    return spark.table(q.name)

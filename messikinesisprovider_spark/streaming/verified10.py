@@ -21,14 +21,11 @@ shuffle keyed on (window, type) — no per-event state.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .verified import _staged_events_log
+from .verified import _staged_events_log, _table
 
 _HOP_ORACLE = """
 WITH ev AS (
@@ -82,15 +79,6 @@ def streaming_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "value_sum")
     )
-    name = "shw_" + uuid.uuid4().hex[:10]
     with consume.state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="shw_ckpt_"))
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        q = consume.run_available_now(agg, table=_table("shw"), output_mode="complete")
+    return spark.table(q.name)

@@ -82,32 +82,23 @@ def streaming_stateful_high_watermark(spark: SparkSession, sf_dir: str) -> DataF
             (F.col("event_id") % 2 == 0).alias("even"),
         )
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="hwmlog_"), "log")
-    log = MessiLog(spark, root, n_shards=4)
-    ckpt = tempfile.mkdtemp(prefix="hwm_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="hwm_out_") + "/out"
+    # the parquet sink dir outlives the call (the result reads it); log and
+    # checkpoint are scratch
+    out_dir = tempfile.mkdtemp(prefix="hwm_out_")
     t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-    def drain() -> None:
-        stream = consume.stream_log(spark, root, files_per_trigger=1_000_000).select(
-            "partition_key",
-            F.col("external_id").cast("bigint").alias("sequence_number"),
+    with tempfile.TemporaryDirectory(prefix="hwmlog_") as scratch:
+        root, ckpt = os.path.join(scratch, "log"), os.path.join(scratch, "ckpt")
+        log = MessiLog(spark, root, n_shards=4)
+        ingest_dataframe(log, ev.filter(F.col("even")).drop("even"), "events", now=t0)
+        hwm = high_watermarks(
+            consume.stream_log(spark, root, files_per_trigger=1_000_000).select(
+                "partition_key",
+                F.col("external_id").cast("bigint").alias("sequence_number"),
+            )
         )
-        q = (
-            high_watermarks(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    ingest_dataframe(log, ev.filter(F.col("even")).drop("even"), "events", now=t0)
-    drain()
-    ingest_dataframe(log, ev.filter(~F.col("even")).drop("even"), "events", now=t0)
-    drain()
+        consume.run_available_now(hwm, ckpt, path=out_dir)
+        ingest_dataframe(log, ev.filter(~F.col("even")).drop("even"), "events", now=t0)
+        consume.run_available_now(hwm, ckpt, path=out_dir)
 
     emitted = spark.read.schema(
         "partition_key string, high_water_seq bigint, n_seen bigint, n_regressions bigint"

@@ -79,13 +79,16 @@ def streaming_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         "ts",
         F.create_map(F.lit("etype"), F.col("event_type")).alias("attributes"),
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="chained_"), "log")
-    log = MessiLog(spark, root, n_shards=4)
-    ckpt = tempfile.mkdtemp(prefix="chained_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="chained_out_") + "/out"
+    # the parquet sink dir outlives the call (the result reads it); log and
+    # checkpoint are scratch
+    out_dir = tempfile.mkdtemp(prefix="chained_out_")
     t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-    def drain():
+    with tempfile.TemporaryDirectory(prefix="chained_") as scratch:
+        root, ckpt = os.path.join(scratch, "log"), os.path.join(scratch, "ckpt")
+        log = MessiLog(spark, root, n_shards=4)
+        # pass 1: all real events in one batch — hourly state builds, the
+        # no-data batch cascades finalized hours into the daily level
+        ingest_dataframe(log, src, "events", now=t0)
         hourly = (
             consume.stream_log(spark, root, files_per_trigger=1_000_000)
             .filter(F.col("attributes")["etype"].isNotNull())
@@ -102,36 +105,23 @@ def streaming_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFra
             )
             .select(F.col("d.start").alias("day"), "event_type", "n_hours", "n_events")
         )
-        q = (
-            daily.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        consume.run_available_now(daily, ckpt, path=out_dir)
+        # pass 2: sentinel 48 h out closes every real hour AND day; its own
+        # windows never finalize, so it cannot appear in the output
+        sentinel = spark.createDataFrame(
+            [
+                (
+                    "sentinel_" + uuid.uuid4().hex[:6],
+                    "sentinel",
+                    mx + timedelta(hours=48),
+                    {"etype": "sentinel"},
+                )
+            ],
+            "partition_key string, external_id string, ts timestamp, "
+            "attributes map<string,string>",
         )
-        q.awaitTermination()
-
-    # pass 1: all real events in one batch — hourly state builds, the
-    # no-data batch cascades finalized hours into the daily level
-    ingest_dataframe(log, src, "events", now=t0)
-    drain()
-    # pass 2: sentinel 48 h out closes every real hour AND day; its own
-    # windows never finalize, so it cannot appear in the output
-    sentinel = spark.createDataFrame(
-        [
-            (
-                "sentinel_" + uuid.uuid4().hex[:6],
-                "sentinel",
-                mx + timedelta(hours=48),
-                {"etype": "sentinel"},
-            )
-        ],
-        "partition_key string, external_id string, ts timestamp, "
-        "attributes map<string,string>",
-    )
-    ingest_dataframe(log, sentinel, "events", now=t0 + timedelta(seconds=1))
-    drain()
+        ingest_dataframe(log, sentinel, "events", now=t0 + timedelta(seconds=1))
+        consume.run_available_now(daily, ckpt, path=out_dir)
     emitted = spark.read.schema(schema).parquet(out_dir)
     return emitted.select(
         "day",

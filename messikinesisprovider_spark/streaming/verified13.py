@@ -73,16 +73,18 @@ def streaming_union_two_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         (F.col("event_type") == "purchase").alias("is_a"),
     )
-    tmp = tempfile.mkdtemp(prefix="union2_")
-    root_a = os.path.join(tmp, "log_a")
-    root_b = os.path.join(tmp, "log_b")
-    log_a = MessiLog(spark, root_a, n_shards=4)
-    log_b = MessiLog(spark, root_b, n_shards=2)
-    ckpt = tempfile.mkdtemp(prefix="union2_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="union2_out_") + "/out"
+    # the parquet sink dir outlives the call (the result reads it); logs and
+    # checkpoint are scratch
+    out_dir = tempfile.mkdtemp(prefix="union2_out_")
     t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-    def drain():
+    with tempfile.TemporaryDirectory(prefix="union2_") as scratch:
+        root_a = os.path.join(scratch, "log_a")
+        root_b = os.path.join(scratch, "log_b")
+        ckpt = os.path.join(scratch, "ckpt")
+        log_a = MessiLog(spark, root_a, n_shards=4)
+        log_b = MessiLog(spark, root_b, n_shards=2)
+        ingest_dataframe(log_a, base.filter(F.col("is_a")).drop("is_a"), "events", now=t0)
+        ingest_dataframe(log_b, base.filter(~F.col("is_a")).drop("is_a"), "events", now=t0)
         sa = (
             consume.stream_log(spark, root_a, files_per_trigger=1_000_000)
             .select("ts", F.lit("A").alias("src"))
@@ -98,35 +100,23 @@ def streaming_union_two_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_messages"))
             .select(F.col("w.start").alias("window_start"), "src", "n_messages")
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    ingest_dataframe(log_a, base.filter(F.col("is_a")).drop("is_a"), "events", now=t0)
-    ingest_dataframe(log_b, base.filter(~F.col("is_a")).drop("is_a"), "events", now=t0)
-    drain()
-    # sentinel into EACH log: the query watermark is min(per-source wm), so
-    # both must advance for the real windows to flush; the sentinels' own
-    # windows never close and never emit
-    for log, tag in ((log_a, "a"), (log_b, "b")):
-        sentinel = spark.createDataFrame(
-            [
-                (
-                    "sentinel_" + uuid.uuid4().hex[:6],
-                    f"sentinel_{tag}",
-                    mx + timedelta(hours=2),
-                )
-            ],
-            "partition_key string, external_id string, ts timestamp",
-        )
-        ingest_dataframe(log, sentinel, "events", now=t0 + timedelta(seconds=1))
-    drain()
+        consume.run_available_now(agg, ckpt, path=out_dir)
+        # sentinel into EACH log: the query watermark is min(per-source wm),
+        # so both must advance for the real windows to flush; the sentinels'
+        # own windows never close and never emit
+        for log, tag in ((log_a, "a"), (log_b, "b")):
+            sentinel = spark.createDataFrame(
+                [
+                    (
+                        "sentinel_" + uuid.uuid4().hex[:6],
+                        f"sentinel_{tag}",
+                        mx + timedelta(hours=2),
+                    )
+                ],
+                "partition_key string, external_id string, ts timestamp",
+            )
+            ingest_dataframe(log, sentinel, "events", now=t0 + timedelta(seconds=1))
+        consume.run_available_now(agg, ckpt, path=out_dir)
     emitted = spark.read.schema(schema).parquet(out_dir)
     # the sentinel hour could emit for one source if the OTHER source's
     # sentinel lands later in event time; pin the contract instead by

@@ -20,14 +20,14 @@ returns a null iterator at a drained closed shard).
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .verified import _NULL_PK, pk_decode
+from .verified import _NULL_PK
+from .verified2 import kinesis_event_type_counts
 
 _CLIENT_FACTORY = "messikinesisprovider_spark.sources.kinesis_sim:client_from_options"
 
@@ -111,60 +111,22 @@ def streaming_kinesis_reshard_pipeline(spark: SparkSession, sf_dir: str) -> Data
     from ..sources.kinesis_sim import FakeKinesisClient
     from ..sources.kinesis_source import register as register_source
 
-    statedir = tempfile.mkdtemp(prefix="kinesis_reshard_")
-    client = FakeKinesisClient(statedir)
-    client.create_stream(StreamName="events", ShardCount=2)
-    register_source(spark)  # needed before the native-producer publish
+    with tempfile.TemporaryDirectory(prefix="kinesis_reshard_") as statedir:
+        client = FakeKinesisClient(statedir)
+        client.create_stream(StreamName="events", ShardCount=2)
+        register_source(spark)  # needed before the native-producer publish
 
-    publish_phase(spark, sf_dir, statedir, phase=0)
-    # split shard 0 at the midpoint of ITS range (the lower half of the
-    # 128-bit space): parent 0 closes holding its half-corpus records,
-    # children 2 and 3 take over its key range
-    client.split_shard(
-        StreamName="events", ShardToSplit="0", NewStartingHashKey=str(1 << 126)
-    )
-    publish_phase(spark, sf_dir, statedir, phase=1)
-
-    register_source(spark)
-    base = tempfile.mkdtemp(prefix="skrp_")
-    out_dir, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.format("kinesismessi")
-        .option("streamname", "events")
-        .option(
-            "clientfactory",
-            "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
+        publish_phase(spark, sf_dir, statedir, phase=0)
+        # split shard 0 at the midpoint of ITS range (the lower half of the
+        # 128-bit space): parent 0 closes holding its half-corpus records,
+        # children 2 and 3 take over its key range
+        client.split_shard(
+            StreamName="events", ShardToSplit="0", NewStartingHashKey=str(1 << 126)
         )
-        .option("statedir", statedir)
-        .option("pollintervalms", "10")
-        .option("reader", "partitioned")
-        .option("metadatadir", os.path.join(base, "meta"))
-        .load()
-    )
-    slim = stream.select(
-        F.col("attributes")["event_type"].alias("event_type"),
-        F.col("partition_key").alias("user_key"),
-    )
-    # drain until stable: batch 1 reads shard 1 + drains parent 0 to its
-    # closure marker; batch 2 unlocks children 2/3; batch 3 confirms empty
-    for _ in range(4):
-        q = (
-            slim.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # stability from the query's own progress (no extra count job): a
-        # pass that ingested 0 rows is the confirming empty batch
-        if sum(int(p["numInputRows"]) for p in (q.recentProgress or [])) == 0:
-            break
-    drained = spark.read.parquet(out_dir)
-    return drained.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(pk_decode(F.col("user_key"))).alias("n_users"),
-    )
+        publish_phase(spark, sf_dir, statedir, phase=1)
+        # drain until stable: batch 1 reads shard 1 + drains parent 0 to its
+        # closure marker; batch 2 unlocks children 2/3; batch 3 confirms empty
+        return kinesis_event_type_counts(spark, statedir, reader="partitioned")
 
 
 @register(
@@ -200,10 +162,6 @@ def streaming_kinesis_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
     from ..sources.kinesis_sim import FakeKinesisClient
     from ..sources.kinesis_source import register as register_source
 
-    statedir = tempfile.mkdtemp(prefix="kinesis_writer_")
-    FakeKinesisClient(statedir).create_stream(StreamName="events", ShardCount=4)
-    register_source(spark)
-
     env = events_tbl(spark, sf_dir).select(
         F.coalesce(F.col("user_id").cast("string"), F.lit(_NULL_PK)).alias(
             "partition_key"
@@ -214,51 +172,16 @@ def streaming_kinesis_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
     payloads = wire.encode_column(env, out_col="payload").select(
         "partition_key", "payload"
     )
-    (
-        payloads.write.format("kinesismessi")
-        .option("streamname", "events")
-        .option(
-            "clientfactory",
-            "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
+    with tempfile.TemporaryDirectory(prefix="kinesis_writer_") as statedir:
+        FakeKinesisClient(statedir).create_stream(StreamName="events", ShardCount=4)
+        register_source(spark)
+        (
+            payloads.write.format("kinesismessi")
+            .option("streamname", "events")
+            .option("clientfactory", _CLIENT_FACTORY)
+            .option("statedir", statedir)
+            .mode("append")
+            .save()
         )
-        .option("statedir", statedir)
-        .mode("append")
-        .save()
-    )
-
-    base = tempfile.mkdtemp(prefix="skwp_")
-    out_dir, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.format("kinesismessi")
-        .option("streamname", "events")
-        .option(
-            "clientfactory",
-            "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
-        )
-        .option("statedir", statedir)
-        .option("pollintervalms", "10")
-        .option("reader", "partitioned")
-        .option("metadatadir", os.path.join(base, "meta"))
-        .load()
-    )
-    slim = stream.select(
-        F.col("attributes")["event_type"].alias("event_type"),
-        F.col("partition_key").alias("user_key"),
-    )
-    for _ in range(2):  # pass 1 drains to tip; pass 2 must append nothing
-        q = (
-            slim.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # stability from the query's own progress (no extra count job)
-        if sum(int(p["numInputRows"]) for p in (q.recentProgress or [])) == 0:
-            break
-    drained = spark.read.parquet(out_dir)
-    return drained.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(pk_decode(F.col("user_key"))).alias("n_users"),
-    )
+        # pass 1 drains to tip; pass 2 ingests nothing
+        return kinesis_event_type_counts(spark, statedir, reader="partitioned")

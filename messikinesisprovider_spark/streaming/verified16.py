@@ -51,6 +51,7 @@ from pyspark.sql.window import Window as W
 from ..registry import register
 from ..operators.pipeline91 import _QD_K1, _QD_K2, _QD_PCTS
 from ..operators.relational import events_tbl
+from . import consume
 from .verified import pk_encode
 
 _N_STAGES = 3
@@ -153,7 +154,8 @@ FROM exact JOIN est USING (g) JOIN bounds USING (g)
 
 
 def digest_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str):
-    """foreachBatch level-1 digest increments, idempotent under replay.
+    """foreachBatch level-1 digest increments (availableNow drain; returns
+    the stopped query), idempotent under replay.
 
     Each batch writes its K-centroid-per-group digest to
     ``inc/batch=<id>`` with overwrite (replays rewrite the identical
@@ -194,12 +196,7 @@ def digest_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str)
         )
         cent.write.mode("overwrite").parquet(os.path.join(inc_root, f"batch={batch_id}"))
 
-    return (
-        stream_df.writeStream.foreachBatch(build)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return consume.run_available_now(stream_df, checkpoint_dir, foreach_batch=build)
 
 
 @register(
@@ -214,7 +211,6 @@ def digest_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str)
 )
 def streaming_quantile_digest_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..log import MessiLog, ingest_dataframe
-    from . import consume
     from .verified8 import _promote_stage
 
     out_schema = (
@@ -238,28 +234,29 @@ def streaming_quantile_digest_maintenance(spark: SparkSession, sf_dir: str) -> D
         ).alias("attributes"),
         (F.pmod(F.col("event_id"), F.lit(_N_STAGES)) + 1).cast("int").alias("stage"),
     )
-    stage_root = os.path.join(tempfile.mkdtemp(prefix="sqd_stage_"), "log")
-    stage_log = MessiLog(spark, stage_root, n_shards=4)
     from datetime import datetime, timezone
 
-    ingest_dataframe(
-        stage_log, src, "events",
-        now=datetime(2026, 1, 1, tzinfo=timezone.utc), stage_col="stage",
-    )
-    root = os.path.join(tempfile.mkdtemp(prefix="sqd_root_"), "log")
-    os.makedirs(root, exist_ok=True)
+    # the increment store outlives the call (the result reads it); logs and
+    # checkpoint are scratch
     base = tempfile.mkdtemp(prefix="sqd_state_")
-    ckpt = os.path.join(base, "ckpt")
-    with consume.state_partitions(spark):
-        for stage in range(1, _N_STAGES + 1):
-            if not _promote_stage(stage_root, root, stage):
-                continue
-            q = digest_accumulate(
-                consume.stream_log(spark, root, files_per_trigger=1_000_000),
-                state_dir=base,
-                checkpoint_dir=ckpt,
-            )
-            q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="sqd_") as scratch:
+        stage_root = os.path.join(scratch, "stage")
+        stage_log = MessiLog(spark, stage_root, n_shards=4)
+        ingest_dataframe(
+            stage_log, src, "events",
+            now=datetime(2026, 1, 1, tzinfo=timezone.utc), stage_col="stage",
+        )
+        root = os.path.join(scratch, "log")
+        os.makedirs(root)
+        ckpt = os.path.join(scratch, "ckpt")
+        with consume.state_partitions(spark):
+            for stage in range(1, _N_STAGES + 1):
+                if _promote_stage(stage_root, root, stage):
+                    digest_accumulate(
+                        consume.stream_log(spark, root, files_per_trigger=1_000_000),
+                        state_dir=base,
+                        checkpoint_dir=ckpt,
+                    )
     store = os.path.join(base, "inc")
     if not os.path.isdir(store):
         return spark.createDataFrame([], out_schema)

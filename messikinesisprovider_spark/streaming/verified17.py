@@ -21,9 +21,7 @@ remaining unmatched row on both sides.
 
 from __future__ import annotations
 
-import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,20 +97,10 @@ def streaming_stream_stream_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
     )
 
-    base = tempfile.mkdtemp(prefix="ssf_" + uuid.uuid4().hex[:6] + "_")
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    for _ in range(2):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    try:
-        return spark.read.schema(joined.schema).parquet(out)
-    except Exception:
-        # Zero microbatches wrote no files (empty source): the empty relation.
-        return spark.createDataFrame([], joined.schema)
+    # Only the parquet sink dir outlives the call; zero microbatches (empty
+    # source) leave it empty and the read is the empty relation.
+    out = tempfile.mkdtemp(prefix="ssf_out_")
+    with tempfile.TemporaryDirectory(prefix="ssf_ckpt_") as ckpt:
+        for _ in range(2):
+            consume.run_available_now(joined, ckpt, path=out)
+    return spark.read.schema(joined.schema).parquet(out)

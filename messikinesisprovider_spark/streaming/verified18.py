@@ -37,6 +37,7 @@ from ..registry import register
 from ..operators.pipeline99 import _SPRT_ARM, _SPRT_BOUND, _SPRT_LR0, _SPRT_LR1
 from ..operators.dedup import h60_duck, h60_spark
 from ..operators.relational import events_tbl
+from . import consume
 from .verified import pk_encode
 
 _N_STAGES = 3
@@ -78,7 +79,8 @@ FROM cum
 
 
 def sprt_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str):
-    """foreachBatch per-arm count increments, idempotent under replay."""
+    """foreachBatch per-arm count increments (availableNow drain; returns
+    the stopped query), idempotent under replay."""
     import shutil
 
     inc_root = os.path.join(state_dir, "inc")
@@ -114,12 +116,7 @@ def sprt_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str):
             os.path.join(inc_root, f"batch={batch_id}")
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(build)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return consume.run_available_now(stream_df, checkpoint_dir, foreach_batch=build)
 
 
 @register(
@@ -136,7 +133,6 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timezone
 
     from ..log import MessiLog, ingest_dataframe
-    from . import consume
     from .verified8 import _promote_stage
 
     out_schema = (
@@ -155,26 +151,27 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("attributes"),
         (F.pmod(F.col("event_id"), F.lit(_N_STAGES)) + 1).cast("int").alias("stage"),
     )
-    stage_root = os.path.join(tempfile.mkdtemp(prefix="sprt_stage_"), "log")
-    stage_log = MessiLog(spark, stage_root, n_shards=4)
-    ingest_dataframe(
-        stage_log, src, "events",
-        now=datetime(2026, 1, 1, tzinfo=timezone.utc), stage_col="stage",
-    )
-    root = os.path.join(tempfile.mkdtemp(prefix="sprt_root_"), "log")
-    os.makedirs(root, exist_ok=True)
+    # the increment store outlives the call (the result reads it); logs and
+    # checkpoint are scratch
     base = tempfile.mkdtemp(prefix="sprt_state_")
-    ckpt = os.path.join(base, "ckpt")
-    with consume.state_partitions(spark):
-        for stage in range(1, _N_STAGES + 1):
-            if not _promote_stage(stage_root, root, stage):
-                continue
-            q = sprt_accumulate(
-                consume.stream_log(spark, root, files_per_trigger=1_000_000),
-                state_dir=base,
-                checkpoint_dir=ckpt,
-            )
-            q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="sprt_") as scratch:
+        stage_root = os.path.join(scratch, "stage")
+        stage_log = MessiLog(spark, stage_root, n_shards=4)
+        ingest_dataframe(
+            stage_log, src, "events",
+            now=datetime(2026, 1, 1, tzinfo=timezone.utc), stage_col="stage",
+        )
+        root = os.path.join(scratch, "log")
+        os.makedirs(root)
+        ckpt = os.path.join(scratch, "ckpt")
+        with consume.state_partitions(spark):
+            for stage in range(1, _N_STAGES + 1):
+                if _promote_stage(stage_root, root, stage):
+                    sprt_accumulate(
+                        consume.stream_log(spark, root, files_per_trigger=1_000_000),
+                        state_dir=base,
+                        checkpoint_dir=ckpt,
+                    )
     store = os.path.join(base, "inc")
     if not os.path.isdir(store):
         return spark.createDataFrame([], out_schema)

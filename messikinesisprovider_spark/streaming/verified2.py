@@ -7,30 +7,14 @@ must never shift between rounds (see registry.all_specs).
 
 from __future__ import annotations
 
+import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .verified import _NULL_PK, _staged_events_log, pk_decode
-
-
-def _drain_append(df: DataFrame, prefix: str) -> DataFrame:
-    """Run an append-mode streaming query to a memory sink and return the
-    drained table."""
-    name = prefix + "_" + uuid.uuid4().hex[:10]
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=prefix + "_ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return df.sparkSession.table(name)
+from .verified import _NULL_PK, _staged_events_log, _table, pk_decode
 
 
 @register(
@@ -103,7 +87,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("purchase_user").cast("bigint").alias("user_id"),
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("lag_us"),
     )
-    return _drain_append(joined, "ssj")
+    return spark.table(consume.run_available_now(joined, table=_table("ssj")).name)
 
 
 # Winner tiebreak: event-time micros scaled past the event_id domain, so the
@@ -151,27 +135,26 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets a MERGE-capable table format instead of rewrite — the
     reduction logic is identical.
     """
-    import os
-
     from . import consume, materialize
 
     root = _staged_events_log(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="cdc_upsert_")
-    snap = os.path.join(base, "snapshot")
+    # the snapshot dir outlives the call (the result reads it); the
+    # checkpoint is drain scratch
+    snap = os.path.join(tempfile.mkdtemp(prefix="cdc_upsert_"), "snapshot")
     # Rank the winner on a NUMERIC event id: external_id is an unpadded
     # decimal string, and string ordering diverges from the oracle's
     # numeric tiebreak when ids differ in digit count ("9" > "10").
     stream = consume.stream_log(spark, root).withColumn(
         "event_id_num", F.col("external_id").cast("bigint")
     )
-    q = materialize.upsert_snapshot(
-        stream,
-        snapshot_dir=snap,
-        checkpoint_dir=os.path.join(base, "ckpt"),
-        key="partition_key",
-        order_cols=("ts", "event_id_num"),
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="cdc_upsert_ckpt_") as ckpt:
+        materialize.upsert_snapshot(
+            stream,
+            snapshot_dir=snap,
+            checkpoint_dir=ckpt,
+            key="partition_key",
+            order_cols=("ts", "event_id_num"),
+        )
     if not os.path.isdir(snap):
         # zero microbatches fired (empty source log): the upsert never
         # materialized a snapshot — the correct state is the empty relation
@@ -207,14 +190,11 @@ def _staged_kinesis(spark: SparkSession, sf_dir: str) -> str:
     key = (id(spark), sf_dir)
     if key in _KINESIS_STAGED:
         return _KINESIS_STAGED[key]
-    import os
-    import tempfile as _tf
-
     from .. import wire
     from ..operators.relational import events_tbl
     from ..sources.kinesis_sim import FakeKinesisClient
 
-    statedir = _tf.mkdtemp(prefix="kinesis_sim_")
+    statedir = tempfile.mkdtemp(prefix="kinesis_sim_")
     client = FakeKinesisClient(statedir)
     client.create_stream(StreamName="events", ShardCount=4)
     rows = (
@@ -239,6 +219,62 @@ def _staged_kinesis(spark: SparkSession, sf_dir: str) -> str:
         client.put_records(StreamName="events", Records=batch)
     _KINESIS_STAGED[key] = statedir
     return statedir
+
+
+def kinesis_event_type_counts(
+    spark: SparkSession, statedir: str, reader: str = "simple"
+) -> DataFrame:
+    """Consume the broker stream "events" in `statedir` through
+    format("kinesismessi") with the given reader, drain it to the tip into a
+    parquet dir, and aggregate per event_type — the shared body of every
+    Kinesis consumer topology (they differ only in how the broker is filled
+    and which reader drains it).
+
+    Drain-to-tip loop: the simple reader prefetches one F1-bounded fill per
+    shard at planning and availableNow stops at that captured offset, so a
+    deep backlog needs restarts; the partitioned reader reads each eligible
+    shard to the tip but unlocks reshard children only in the batch after
+    their parents close. Each pass resumes from the checkpoint (exclusive
+    AFTER_SEQUENCE per shard), so the loop doubles as a repeated
+    exactly-once restart drill; it ends at the first pass that ingests 0
+    rows, read from the query's own progress (no count job). The parquet
+    dir outlives the call; checkpoint and reader metadata do not."""
+    from ..sources.kinesis_source import register as register_source
+    from . import consume
+
+    register_source(spark)
+    out_dir = tempfile.mkdtemp(prefix="kinesis_out_")
+    with tempfile.TemporaryDirectory(prefix="kinesis_drain_") as scratch:
+        slim = (
+            spark.readStream.format("kinesismessi")
+            .option("streamname", "events")
+            .option(
+                "clientfactory",
+                "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
+            )
+            .option("statedir", statedir)
+            .option("pollintervalms", "10")
+            .option("reader", reader)
+            .option("metadatadir", os.path.join(scratch, "meta"))
+            .load()
+            .select(
+                F.col("attributes")["event_type"].alias("event_type"),
+                F.col("partition_key").alias("user_key"),
+            )
+        )
+        ckpt = os.path.join(scratch, "ckpt")
+        for _ in range(64):  # bound: each pass advances >= one fill per shard
+            q = consume.run_available_now(slim, ckpt, path=out_dir)
+            if sum(int(p["numInputRows"]) for p in q.recentProgress) == 0:
+                break
+    return (
+        spark.read.parquet(out_dir)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct(pk_decode(F.col("user_key"))).alias("n_users"),
+        )
+    )
 
 
 @register(
@@ -269,51 +305,4 @@ def streaming_kinesis_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     is API-rate-bound per shard); the aggregation below reduces each
     microbatch map-side before the tiny event_type-keyed state.
     """
-    from ..sources.kinesis_source import register as register_source
-
-    statedir = _staged_kinesis(spark, sf_dir)
-    register_source(spark)
-    stream = (
-        spark.readStream.format("kinesismessi")
-        .option("streamname", "events")
-        .option(
-            "clientfactory",
-            "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
-        )
-        .option("statedir", statedir)
-        .option("pollintervalms", "10")
-        .load()
-    )
-    slim = stream.select(
-        F.col("attributes")["event_type"].alias("event_type"),
-        F.col("partition_key").alias("user_key"),
-    )
-    # Drain-to-caught-up loop: a SimpleDataSourceStreamReader prefetches one
-    # batch per shard at planning, and availableNow stops at that captured
-    # offset — so a backlog deeper than one F1-bounded fill needs restarts.
-    # Each pass resumes from the checkpoint (exclusive AFTER_SEQUENCE per
-    # shard), so the loop doubles as a repeated exactly-once restart drill;
-    # it terminates when a pass appends nothing.
-    import os
-
-    base = tempfile.mkdtemp(prefix="skp_")
-    out_dir, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    prev = -1
-    for _ in range(64):  # bound: each pass advances >= one fill per shard
-        q = (
-            slim.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n = spark.read.parquet(out_dir).count()
-        if n == prev:
-            break
-        prev = n
-    drained = spark.read.parquet(out_dir)
-    return drained.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.count_distinct(pk_decode(F.col("user_key"))).alias("n_users"),
-    )
+    return kinesis_event_type_counts(spark, _staged_kinesis(spark, sf_dir))

@@ -4,15 +4,12 @@ earlier modules (append-only registry order).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .verified import pk_decode
-from .verified2 import _staged_kinesis
+from .verified import _table, pk_decode
+from .verified2 import _staged_kinesis, kinesis_event_type_counts
 
 
 @register(
@@ -40,52 +37,13 @@ def streaming_kinesis_pipeline_partitioned(spark: SparkSession, sf_dir: str) -> 
     round-trip all have to be lossless and duplicate-free for the hash to
     match.
 
-    Unlike the simple reader (one prefetched fill per availableNow run,
-    hence its drain loop), a partitioned batch reads each shard to the tip,
-    so ONE availableNow pass drains the backlog; a second pass asserts
-    nothing more arrives.
+    Unlike the simple reader (one prefetched fill per availableNow run),
+    a partitioned batch reads each shard to the tip, so ONE availableNow
+    pass drains the backlog; the second pass ingests nothing and ends the
+    drain loop.
     """
-    from ..sources.kinesis_source import register as register_source
-
-    statedir = _staged_kinesis(spark, sf_dir)
-    register_source(spark)
-    base = tempfile.mkdtemp(prefix="skpp_")
-    out_dir, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.format("kinesismessi")
-        .option("streamname", "events")
-        .option(
-            "clientfactory",
-            "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
-        )
-        .option("statedir", statedir)
-        .option("pollintervalms", "10")
-        .option("reader", "partitioned")
-        .option("metadatadir", os.path.join(base, "meta"))
-        .load()
-    )
-    slim = stream.select(
-        F.col("attributes")["event_type"].alias("event_type"),
-        F.col("partition_key").alias("user_key"),
-    )
-    prev = -1
-    for _ in range(2):  # pass 1 drains to tip; pass 2 must append nothing
-        q = (
-            slim.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n = spark.read.parquet(out_dir).count()
-        if n == prev:
-            break
-        prev = n
-    drained = spark.read.parquet(out_dir)
-    return drained.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct(pk_decode(F.col("user_key"))).alias("n_users"),
+    return kinesis_event_type_counts(
+        spark, _staged_kinesis(spark, sf_dir), reader="partitioned"
     )
 
 
@@ -126,8 +84,6 @@ def streaming_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish -> wire-encode -> readStream -> stateful-collect -> match path
     must be lossless and order-faithful for the hash to land.
     """
-    import uuid
-
     from . import consume
     from .verified import _staged_events_log
 
@@ -144,17 +100,8 @@ def streaming_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ev"),
     ).filter(F.col("user_id").isNotNull())
     agg = ev.groupBy("user_id").agg(F.collect_list("ev").alias("evs"))
-    name = "seqm_" + uuid.uuid4().hex[:10]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="seqm_ckpt_"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    seqs = spark.table(name).select(
+    q = consume.run_available_now(agg, table=_table("seqm"), output_mode="complete")
+    seqs = spark.table(q.name).select(
         "user_id",
         F.array_join(F.expr("transform(sort_array(evs), e -> e.sym)"), "").alias("seq"),
     )

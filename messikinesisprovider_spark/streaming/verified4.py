@@ -25,13 +25,12 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .verified import _NULL_PK, _staged_events_log, pk_encode
+from .verified import _NULL_PK, pk_encode
 
 _STAGED_SENTINEL: dict = {}
 
@@ -155,21 +154,11 @@ def streaming_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the sentinel advances the checkpointed watermark at its final commit);
     # pass 2 wakes up with that watermark, sees no new data, and its no-data
     # microbatch evicts-and-emits every remaining unmatched click. A memory
-    # sink would truncate on restart, so the drain goes through a file sink.
-    base = tempfile.mkdtemp(prefix="ssl_" + uuid.uuid4().hex[:6] + "_")
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    for _ in range(2):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    try:
-        return spark.read.schema(joined.schema).parquet(out)
-    except Exception:
-        # Zero microbatches wrote no files (empty source): the empty relation.
-        return spark.createDataFrame([], joined.schema)
+    # sink would truncate on restart, so the drain goes through a file sink
+    # (the one dir that outlives the call). Zero microbatches (empty source)
+    # leave it empty: the read is the empty relation.
+    out = tempfile.mkdtemp(prefix="ssl_out_")
+    with tempfile.TemporaryDirectory(prefix="ssl_ckpt_") as ckpt:
+        for _ in range(2):
+            consume.run_available_now(joined, ckpt, path=out)
+    return spark.read.schema(joined.schema).parquet(out)

@@ -51,16 +51,17 @@ def streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import consume, materialize
 
     root = _staged_events_log(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="scd2_stream_")
-    state = os.path.join(base, "state")
-    with consume.state_partitions(spark):
-        q = materialize.scd2_maintain(
+    # the state dir outlives the call (the result reads its version table)
+    state = tempfile.mkdtemp(prefix="scd2_stream_")
+    with consume.state_partitions(spark), tempfile.TemporaryDirectory(
+        prefix="scd2_ckpt_"
+    ) as ckpt:
+        materialize.scd2_maintain(
             consume.stream_log(spark, root),
             state_dir=state,
-            checkpoint_dir=os.path.join(base, "ckpt"),
+            checkpoint_dir=ckpt,
             tier_band=TIER_BAND,
         )
-        q.awaitTermination()
     versions_dir = os.path.join(state, "versions")
     if not os.path.isdir(versions_dir):
         return spark.createDataFrame(

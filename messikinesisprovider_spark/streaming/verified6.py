@@ -29,8 +29,7 @@ from pyspark.sql.window import Window as W
 
 from ..registry import register
 from ..operators.pipeline13 import TIER_BAND, _SCD2_CTES
-from .verified import _NULL_PK, _staged_events_log
-from .verified2 import _drain_append
+from .verified import _NULL_PK, _staged_events_log, _table
 
 
 @register(
@@ -69,24 +68,35 @@ def streaming_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import consume, materialize
 
     root = _staged_events_log(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pit_stream_")
-    state = os.path.join(base, "state")
-    with consume.state_partitions(spark):
-        q = materialize.scd2_maintain(
+    out_schema = (
+        "click_event_id bigint, user_id bigint, click_ts timestamp, "
+        "version_at_click bigint, tier_at_click bigint"
+    )
+    # the SCD2 store is read only by the enrichment drain, whose memory-sink
+    # result outlives it: every dir is scratch
+    with consume.state_partitions(spark), tempfile.TemporaryDirectory(
+        prefix="pit_stream_"
+    ) as base:
+        state = os.path.join(base, "state")
+        materialize.scd2_maintain(
             consume.stream_log(spark, root),
             state_dir=state,
             checkpoint_dir=os.path.join(base, "ckpt"),
             tier_band=TIER_BAND,
         )
-        q.awaitTermination()
-    out_schema = (
-        "click_event_id bigint, user_id bigint, click_ts timestamp, "
-        "version_at_click bigint, tier_at_click bigint"
-    )
-    versions_dir = os.path.join(state, "versions")
-    if not os.path.isdir(versions_dir):
-        return spark.createDataFrame([], out_schema)
-    wv = W.partitionBy("user_id").orderBy("version")
+        versions_dir = os.path.join(state, "versions")
+        if not os.path.isdir(versions_dir):
+            return spark.createDataFrame([], out_schema)
+        q = consume.run_available_now(
+            _pit_join(spark, root, versions_dir), table=_table("pit_enrich")
+        )
+    return spark.table(q.name)
+
+
+def _pit_join(spark: SparkSession, root: str, versions_dir: str) -> DataFrame:
+    """Click stream joined to the SCD2 version valid at each click's ts."""
+    from . import consume
+
     dim = (
         spark.read.parquet(versions_dir)
         .filter(F.col("user_id") != _NULL_PK)
@@ -111,7 +121,7 @@ def streaming_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("click_ts"),
         )
     )
-    joined = clicks.join(
+    return clicks.join(
         dim,
         (F.col("user_id") == F.col("dim_user"))
         & (F.col("valid_from") <= F.col("click_ts"))
@@ -124,5 +134,3 @@ def streaming_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("version").alias("version_at_click"),
         F.col("tier").alias("tier_at_click"),
     )
-    with consume.state_partitions(spark):
-        return _drain_append(joined, "pit_enrich")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..operators.dedup import h60_duck, h60_spark
+from . import consume
 from .verified import _NULL_PK, _staged_events_log
 
 SKM_ROWS = 4
@@ -57,7 +58,8 @@ def _fan_spark(df: DataFrame, key_col: str) -> DataFrame:
 
 
 def sketch_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str):
-    """foreachBatch CMS accumulation, idempotent under batch replay.
+    """foreachBatch CMS accumulation (availableNow drain; returns the stopped
+    query), idempotent under batch replay.
 
     An additive merge into one counter file would DOUBLE-COUNT a replayed
     microbatch (a crash between the store write and the checkpoint commit
@@ -82,12 +84,7 @@ def sketch_accumulate(stream_df: DataFrame, state_dir: str, checkpoint_dir: str)
         inc = _fan_spark(keys, "k").groupBy("r", "b").agg(F.sum("n").alias("counter"))
         inc.write.mode("overwrite").parquet(os.path.join(inc_root, f"batch={batch_id}"))
 
-    return (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return consume.run_available_now(stream_df, checkpoint_dir, foreach_batch=merge)
 
 
 def _hash_b_duck(r: int) -> str:
@@ -129,17 +126,13 @@ FROM q
     tags=("streaming", "sketch", "countmin", "verified"),
 )
 def streaming_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import consume
-
     root = _staged_events_log(spark, sf_dir)
+    # the increment store outlives the call (the result reads it)
     base = tempfile.mkdtemp(prefix="cms_stream_")
-    with consume.state_partitions(spark):
-        q = sketch_accumulate(
-            consume.stream_log(spark, root),
-            state_dir=base,
-            checkpoint_dir=os.path.join(base, "ckpt"),
-        )
-        q.awaitTermination()
+    with consume.state_partitions(spark), tempfile.TemporaryDirectory(
+        prefix="cms_ckpt_"
+    ) as ckpt:
+        sketch_accumulate(consume.stream_log(spark, root), state_dir=base, checkpoint_dir=ckpt)
     store = os.path.join(base, "inc")
     out_schema = "user_key string, exact_c bigint, est_c bigint, no_underestimate boolean"
     if not os.path.isdir(store):

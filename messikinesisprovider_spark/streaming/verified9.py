@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..operators.dedup import h60_duck, h60_spark
+from ..operators.dedup import h60_spark
 from ..operators.relational import events_tbl
 from .verified import pk_encode
 
@@ -77,48 +77,39 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("event_id").cast("string").alias("external_id"),
         "ts",
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="dedupwm_"), "log")
-    os.makedirs(root, exist_ok=True)
-    stage_root = os.path.join(tempfile.mkdtemp(prefix="dedupwm_stage_"), "log")
-    stage_log = MessiLog(spark, stage_root, n_shards=4)
-    ckpt = tempfile.mkdtemp(prefix="dwm_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="dwm_out_") + "/out"
     t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-    def drain():
-        deduped = (
-            consume.stream_log(spark, root, files_per_trigger=1_000_000)
-            .withWatermark("ts", _WM)
-            .dropDuplicatesWithinWatermark(["external_id"])
-            .select("external_id", "ts", F.lit(1).cast("bigint").alias("n_emitted"))
-        )
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     # ONE staged ingest (round-8: the per-pass ingest jobs and both
     # limit-count probe jobs were the fixed cost here); pass boundaries are
     # enforced by promoting stage dirs between drains — absent stage dirs
-    # double as the empty-source / no-duplicates checks for free.
+    # double as the empty-source / no-duplicates checks for free. Logs and
+    # checkpoint are scratch; only the parquet sink dir outlives the call.
     from .verified8 import _promote_stage
 
-    staged = src.withColumn("stage", F.lit(1)).unionByName(
-        dups.withColumn("stage", F.lit(1))
-    ).unionByName(dups.withColumn("stage", F.lit(2)))
-    ingest_dataframe(stage_log, staged, "events", now=t0, stage_col="stage")
-    with consume.state_partitions(spark):
-        # pass 1: originals + same-batch duplicates (dedup by key, nothing late)
-        if not _promote_stage(stage_root, root, 1):  # empty source
-            return spark.createDataFrame([], schema)
-        drain()
-        # pass 2: the duplicates AGAIN — recent ones die as in-state
-        # duplicates, old ones as late rows; zero new emissions either way
-        if _promote_stage(stage_root, root, 2):
-            drain()
+    with tempfile.TemporaryDirectory(prefix="dedupwm_") as scratch:
+        root = os.path.join(scratch, "log")
+        os.makedirs(root)
+        stage_root = os.path.join(scratch, "stage")
+        stage_log = MessiLog(spark, stage_root, n_shards=4)
+        ckpt = os.path.join(scratch, "ckpt")
+        staged = src.withColumn("stage", F.lit(1)).unionByName(
+            dups.withColumn("stage", F.lit(1))
+        ).unionByName(dups.withColumn("stage", F.lit(2)))
+        ingest_dataframe(stage_log, staged, "events", now=t0, stage_col="stage")
+        with consume.state_partitions(spark):
+            # pass 1: originals + same-batch duplicates (dedup by key,
+            # nothing late)
+            if not _promote_stage(stage_root, root, 1):  # empty source
+                return spark.createDataFrame([], schema)
+            out_dir = tempfile.mkdtemp(prefix="dwm_out_")
+            deduped = (
+                consume.stream_log(spark, root, files_per_trigger=1_000_000)
+                .withWatermark("ts", _WM)
+                .dropDuplicatesWithinWatermark(["external_id"])
+                .select("external_id", "ts", F.lit(1).cast("bigint").alias("n_emitted"))
+            )
+            consume.run_available_now(deduped, ckpt, path=out_dir)
+            # pass 2: the duplicates AGAIN — recent ones die as in-state
+            # duplicates, old ones as late rows; zero new emissions either way
+            if _promote_stage(stage_root, root, 2):
+                consume.run_available_now(deduped, ckpt, path=out_dir)
     return spark.read.schema(schema).parquet(out_dir)

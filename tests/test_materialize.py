@@ -15,8 +15,7 @@ def test_snapshot_keeps_latest_per_key(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     def drain():
-        q = upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
-        q.awaitTermination()
+        upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
         return {
             r["external_id"]: dict(r["attributes"] or {})
             for r in spark.read.parquet(snap).collect()
@@ -56,8 +55,7 @@ def test_crash_between_swap_renames_recovers_staging(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     def drain():
-        q = upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
-        q.awaitTermination()
+        upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
         return {
             r["external_id"]: dict(r["attributes"] or {})
             for r in spark.read.parquet(snap).collect()
@@ -95,7 +93,6 @@ def test_incomplete_first_batch_staging_is_discarded(spark, tmp_path):
     log.publish("t", [
         {"partition_key": "p", "external_id": "k1", "attributes": {"v": "1"}},
     ], now=T0)
-    q = upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
-    q.awaitTermination()
+    upsert_snapshot(consume.stream_log(spark, log.root), snap, ckpt)
     rows = {r["external_id"] for r in spark.read.parquet(snap).collect()}
     assert rows == {"k1"}

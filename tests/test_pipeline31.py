@@ -62,6 +62,27 @@ def test_rfm_matches_pandas_reference(spark):
     assert out == {k: (len(v), sum(v)) for k, v in ref.items()}
 
 
+def test_rfm_ranking_jobs_stay_in_caller_job_group(spark):
+    """The three quartile rankings run their eager jobs from pool threads;
+    each job must carry the caller's job group, or a host cancelling by
+    group cannot reach it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener_bus = sc._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("rfm_job_group_test", "rfm_segmentation build")
+    try:
+        rfm_segmentation(spark, SF)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    listener_bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    assert tracker.getJobIdsForGroup("rfm_job_group_test")
+
+
 def test_cuped_matches_python_reference(spark):
     rows = {r["arm"]: r for r in ab_test_cuped(spark, SF).collect()}
     ev = pd.read_parquet(f"{SF}/events.parquet")

@@ -26,7 +26,9 @@ def fresh_name():
 
 def drain(spark, df, tmp_path, output_mode="append"):
     name = fresh_name()
-    consume.run_available_now(df, str(tmp_path / f"ckpt_{name}"), name, output_mode)
+    consume.run_available_now(
+        df, str(tmp_path / f"ckpt_{name}"), table=name, output_mode=output_mode
+    )
     return spark.table(name)
 
 

@@ -16,13 +16,12 @@ SF = "/root/testdata/sf0.001"
 
 
 def _run_maintain(spark, root, state):
-    q = materialize.scd2_maintain(
+    materialize.scd2_maintain(
         consume.stream_log(spark, root),
         state_dir=state,
         checkpoint_dir=tempfile.mkdtemp(prefix="scd2_ckpt_"),
         tier_band=TIER_BAND,
     )
-    q.awaitTermination()
 
 
 def _versions_set(spark, state):
@@ -111,12 +110,11 @@ def test_sketch_maintenance_full_replay_idempotent(spark):
     base = tempfile.mkdtemp(prefix="cms_replay_")
 
     def run():
-        q = v7.sketch_accumulate(
+        v7.sketch_accumulate(
             consume.stream_log(spark, root),
             state_dir=base,
             checkpoint_dir=tempfile.mkdtemp(prefix="cms_ckpt_"),
         )
-        q.awaitTermination()
         cms = (
             spark.read.option("recursiveFileLookup", "true")
             .parquet(os.path.join(base, "inc"))
