@@ -17,8 +17,9 @@ idiomatic Spark engine:
                   similarity search, text analysis, multimodal columns.
 - ``streaming`` — Structured-Streaming consumption: per-shard ordering,
                   watermarks, windows, effectively-once dedup, retrying sink.
-- ``sources``   — the in-memory/file-backed broker simulator and the (gated)
-                  real-Kinesis connector binding.
+- ``sources``   — the file-backed broker simulator (with a real-wire-shape
+                  skin for conformance tests) and the (gated) real-Kinesis
+                  connector binding.
 
 Everything here is public-knowledge-only: Apache Spark APIs, the reference's
 observable behavior, and published papers.

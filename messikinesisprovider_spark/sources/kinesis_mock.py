@@ -1,52 +1,53 @@
-"""Vendored moto-style Kinesis API-conformance mock (round-5 verdict item 6).
+"""Kinesis API-conformance skin over ``kinesis_sim`` (real AWS wire shapes).
 
-``kinesis_sim.FakeKinesisClient`` is the engine's file-backed broker twin of
-the reference's simulator (KinesisAsyncClientSimulator.java:39-254) — but its
-errors are plain Python exceptions with an ``error_code`` attribute, so the
-botocore half of ``sources.kinesis.error_code`` (the
-``exc.response["Error"]["Code"]`` path) and the transports' tolerance of the
-REAL AWS response shapes were never exercised. This module closes that gap
-with a minimal in-memory client that reproduces, from the public AWS API
-reference (https://docs.aws.amazon.com/kinesis/latest/APIReference/), the
-wire shapes boto3 actually hands back:
+``kinesis_sim.FakeKinesisClient`` is the package's one broker, but its errors
+are plain Python exceptions with an ``error_code`` attribute and its ids,
+sequence numbers and iterators are bare strings, so the botocore half of
+``sources.kinesis.error_code`` (the ``exc.response["Error"]["Code"]`` path)
+and the transports' tolerance of the REAL response shapes would go
+unexercised. ``MockKinesisClient`` runs that same broker over a private
+temporary state directory and changes only what boto3 hands back, per the
+public AWS API reference
+(https://docs.aws.amazon.com/kinesis/latest/APIReference/):
 
 - errors are ``MockClientError`` — the exact botocore ``ClientError``
   contract: ``.response = {"Error": {"Code", "Message"}, "ResponseMetadata":
   {"RequestId", "HTTPStatusCode"}}``, ``.operation_name``, and the
   "An error occurred (Code) when calling the Op operation: Message" string;
-- real shard-id format ``shardId-000000000000`` with HashKeyRange /
-  SequenceNumberRange in DescribeStream (so nothing in the engine can depend
-  on the simulator's bare ``"0"`` ids);
+- real shard ids ``shardId-000000000000`` and 21-digit sequence numbers (so
+  nothing in the engine can depend on the simulator's bare ``"0"`` ids);
 - opaque base64 shard iterators (nothing can cheat by parsing the
   simulator's ``shard;seq;epoch`` structure) with the real 5-minute expiry
   (ExpiredIteratorException) on an injectable clock;
-- PutRecords partial-failure entries carry ``ErrorCode`` +
-  ``ErrorMessage`` per failed record with ``FailedRecordCount`` (the shape
-  KinesisMessiProducer.java:103-160 retries against);
-- parameter validation (GetRecords Limit 1..10000, missing
-  StartingSequenceNumber) raises ``ValidationException``; CreateStream on
-  an existing stream raises ``ResourceInUseException``; unknown streams and
-  shards raise ``ResourceNotFoundException`` with the service's message
-  format.
+- PutRecords partial-failure entries carry ``ErrorCode`` + ``ErrorMessage``
+  per failed record with ``FailedRecordCount`` (the shape
+  KinesisMessiProducer.java:103-160 retries against): ``arm_partial_failure(k)``
+  fails every k-th record of the next PutRecords;
+- CreateStream on an existing stream raises ``ResourceInUseException`` and
+  an empty PutRecords raises ``ValidationException``;
+- every response carries ``ResponseMetadata``, and DescribeStream the
+  stream's ARN, retention and encryption fields.
 
-Fault hooks mirror the simulator's: ``arm_rate_limit()`` (next GetRecords
-throws the throughput error once), ``arm_partial_failure(k)`` (next
-PutRecords fails every k-th record with the per-record throughput error),
-``expire_all_iterators()``.
+Routing, lineage, paging, AT_TIMESTAMP resolution and the other fault hooks
+(``arm_rate_limit`` is the simulator's rate-limit trigger,
+``expire_all_iterators``) are the simulator's own.
 """
 
 from __future__ import annotations
 
 import base64
-import hashlib
 import json
-import time
+import tempfile
 import uuid
+import weakref
+from contextlib import contextmanager
 from datetime import datetime, timezone
+
+from ..schema import format_sequence
+from .kinesis_sim import FakeKinesisClient, SimulatorError
 
 ITERATOR_TTL_S = 300  # real service: iterators expire after 5 minutes
 SHARD_ID_FMT = "shardId-{:012d}"
-MAX_HASH_KEY = (1 << 128) - 1
 
 
 class MockClientError(Exception):
@@ -71,201 +72,97 @@ def _meta() -> dict:
     return {"RequestId": str(uuid.uuid4()), "HTTPStatusCode": 200}
 
 
-class MockKinesisClient:
-    """In-memory boto3-`client("kinesis")` twin with real wire shapes."""
+def _wire_shard(sid: str) -> str:
+    return SHARD_ID_FMT.format(int(sid))
+
+
+def _wire_seq(seq: str) -> str:
+    return str(int(seq)).zfill(21)
+
+
+class MockKinesisClient(FakeKinesisClient):
+    """In-process boto3-`client("kinesis")` twin with real wire shapes; its
+    state directory lives (and is removed) with the client."""
+
+    arm_rate_limit = FakeKinesisClient.trigger_rate_limit_on_next_get_records
 
     def __init__(self, clock=None):
-        self.clock = clock or time.time
-        self._streams: dict[str, list[list[dict]]] = {}  # name -> shards -> records
-        # per-shard lineage/closure/range metadata, parallel to _streams:
-        # {"parents": [ids], "end": record-count-at-closure | None,
-        #  "hash": (lo, hi)}. parents[0] = ParentShardId, parents[1] (merges)
-        # = AdjacentParentShardId — the real DescribeStream lineage fields.
-        self._shard_meta: dict[str, list[dict]] = {}
-        self._epoch = 0
-        self._rate_limit_armed = False
+        self._tmp = tempfile.TemporaryDirectory(prefix="kinesis_mock_")
+        weakref.finalize(self, self._tmp.cleanup)  # explicit: no ResourceWarning
+        super().__init__(self._tmp.name, clock=clock)
         self._partial_failure_every: int | None = None
-
-    # -- fault hooks ---------------------------------------------------------
-    def arm_rate_limit(self) -> None:
-        self._rate_limit_armed = True
 
     def arm_partial_failure(self, every: int) -> None:
         self._partial_failure_every = every
 
-    def expire_all_iterators(self) -> None:
-        self._epoch += 1
+    # -- translation -----------------------------------------------------------
+    @contextmanager
+    def _op(self, op: str):
+        try:
+            yield
+        except SimulatorError as e:
+            raise MockClientError(op, e.error_code, str(e)) from None
 
-    # -- iterator tokens (opaque) ---------------------------------------------
-    def _pack_iterator(self, stream: str, shard_idx: int, seq: int) -> str:
-        payload = {
-            "s": stream,
-            "i": shard_idx,
-            "q": seq,
-            "e": self._epoch,
-            "t": self.clock(),
-        }
+    def _sim_shard(self, op: str, shard_id: str) -> str:
+        prefix, _, num = shard_id.partition("-")
+        if prefix != "shardId" or not num.isdigit():
+            raise MockClientError(op, "ValidationException", f"Invalid ShardId: {shard_id}")
+        return str(int(num))
+
+    def _pack_iterator(self, sim_iterator: str | None) -> str | None:
+        if sim_iterator is None:
+            return None
+        stream, rest = sim_iterator.split("|", 1)
+        sid, seq, epoch = rest.split(";")
+        payload = {"s": stream, "i": int(sid), "q": int(seq), "e": int(epoch), "t": self.clock()}
         return base64.b64encode(json.dumps(payload).encode()).decode()
 
-    def _unpack_iterator(self, op: str, token: str) -> dict:
+    def _unpack_iterator(self, op: str, token: str) -> str:
         try:
-            payload = json.loads(base64.b64decode(token))
-            assert {"s", "i", "q", "e", "t"} <= set(payload)
+            p = json.loads(base64.b64decode(token))
+            sim_iterator = f"{p['s']}|{p['i']};{format_sequence(p['q'])};{p['e']}"
+            age = self.clock() - p["t"]
         except Exception:
             raise MockClientError(op, "ValidationException", "Invalid ShardIterator.")
-        if payload["e"] != self._epoch or self.clock() - payload["t"] > ITERATOR_TTL_S:
+        if age > ITERATOR_TTL_S:
             raise MockClientError(
                 op,
                 "ExpiredIteratorException",
                 "Iterator expired. The iterator was created at a time that is "
                 "past its TTL.",
             )
-        return payload
+        return sim_iterator
 
-    # -- shard-id format -------------------------------------------------------
-    def _shard_index(self, op: str, stream: str, shard_id: str) -> int:
-        try:
-            prefix, num = shard_id.split("-", 1)
-            idx = int(num)
-            assert prefix == "shardId"
-        except Exception:
-            raise MockClientError(
-                op, "ValidationException", f"Invalid ShardId: {shard_id}"
-            )
-        if idx >= len(self._streams[stream]):
-            raise MockClientError(
-                op,
-                "ResourceNotFoundException",
-                f"Shard {shard_id} in stream {stream} under account "
-                "000000000000 does not exist",
-            )
-        return idx
-
-    def _route(self, stream: str, pk: str) -> int:
-        """Shard index for a partition key: md5 128-bit point over the OPEN
-        shards' hash ranges (closed parents accept no new records). For an
-        unresharded stream the stored ranges are the equal CreateStream
-        layout, so this is bit-identical to the original equal-range math."""
-        point = int.from_bytes(hashlib.md5((pk or "").encode()).digest(), "big")
-        for i, ent in enumerate(self._shard_meta[stream]):
-            lo, hi = ent["hash"]
-            if ent["end"] is None and lo <= point <= hi:
-                return i
-        raise MockClientError(
-            "PutRecords",
-            "InvalidArgumentException",
-            f"no open shard covers hash key {point}",
-        )
-
-    def _require_stream(self, op: str, name: str) -> None:
-        if name not in self._streams:
-            raise MockClientError(
-                op,
-                "ResourceNotFoundException",
-                f"Stream {name} under account 000000000000 not found.",
-            )
-
-    # -- control plane ---------------------------------------------------------
+    # -- control plane -----------------------------------------------------------
     def create_stream(self, StreamName: str, ShardCount: int = 1) -> dict:
-        if StreamName in self._streams:
+        if StreamName in self._streams():
             raise MockClientError(
                 "CreateStream",
                 "ResourceInUseException",
-                f"Stream {StreamName} under account 000000000000 already "
-                "exists.",
+                f"Stream {StreamName} under account 000000000000 already exists.",
             )
-        self._streams[StreamName] = [[] for _ in range(ShardCount)]
-        width = (MAX_HASH_KEY + 1) // ShardCount
-        self._shard_meta[StreamName] = [
-            {
-                "parents": [],
-                "end": None,
-                "hash": (
-                    i * width,
-                    (i + 1) * width - 1 if i < ShardCount - 1 else MAX_HASH_KEY,
-                ),
-            }
-            for i in range(ShardCount)
-        ]
+        super().create_stream(StreamName, ShardCount)
         return {"ResponseMetadata": _meta()}
 
-    # -- resharding (SplitShard / MergeShards, public API reference shapes) --
+    def list_streams(self, Limit: int = 100, ExclusiveStartStreamName: str | None = None) -> dict:
+        resp = super().list_streams(Limit, ExclusiveStartStreamName)
+        return {**resp, "ResponseMetadata": _meta()}
+
     def split_shard(self, StreamName: str, ShardToSplit: str, NewStartingHashKey: str) -> dict:
         op = "SplitShard"
-        self._require_stream(op, StreamName)
-        idx = self._shard_index(op, StreamName, ShardToSplit)
-        ent = self._shard_meta[StreamName][idx]
-        if ent["end"] is not None:
-            raise MockClientError(
-                op,
-                "InvalidArgumentException",
-                f"Shard {ShardToSplit} in stream {StreamName} under account "
-                "000000000000 has already been closed",
-            )
-        lo, hi = ent["hash"]
-        try:
-            key = int(NewStartingHashKey)
-        except (TypeError, ValueError):
-            raise MockClientError(
-                op, "ValidationException", f"Invalid NewStartingHashKey: {NewStartingHashKey}"
-            )
-        if not lo < key <= hi:
-            raise MockClientError(
-                op,
-                "InvalidArgumentException",
-                f"NewStartingHashKey {NewStartingHashKey} is not within the "
-                f"hash key range of shard {ShardToSplit}",
-            )
-        ent["end"] = len(self._streams[StreamName][idx])
-        for child_range in ((lo, key - 1), (key, hi)):
-            self._streams[StreamName].append([])
-            self._shard_meta[StreamName].append(
-                {"parents": [ShardToSplit], "end": None, "hash": child_range}
-            )
+        with self._op(op):
+            super().split_shard(StreamName, self._sim_shard(op, ShardToSplit), NewStartingHashKey)
         return {"ResponseMetadata": _meta()}
 
     def merge_shards(self, StreamName: str, ShardToMerge: str, AdjacentShardToMerge: str) -> dict:
         op = "MergeShards"
-        self._require_stream(op, StreamName)
-        ia = self._shard_index(op, StreamName, ShardToMerge)
-        ib = self._shard_index(op, StreamName, AdjacentShardToMerge)
-        a, b = self._shard_meta[StreamName][ia], self._shard_meta[StreamName][ib]
-        if a["end"] is not None or b["end"] is not None:
-            raise MockClientError(
-                op, "InvalidArgumentException", "both shards must be OPEN to merge"
+        with self._op(op):
+            super().merge_shards(
+                StreamName,
+                self._sim_shard(op, ShardToMerge),
+                self._sim_shard(op, AdjacentShardToMerge),
             )
-        if a["hash"][1] + 1 != b["hash"][0] and b["hash"][1] + 1 != a["hash"][0]:
-            raise MockClientError(
-                op,
-                "InvalidArgumentException",
-                f"Shards {ShardToMerge} and {AdjacentShardToMerge} are not "
-                "adjacent in the hash key space",
-            )
-        a["end"] = len(self._streams[StreamName][ia])
-        b["end"] = len(self._streams[StreamName][ib])
-        self._streams[StreamName].append([])
-        self._shard_meta[StreamName].append(
-            {
-                "parents": [ShardToMerge, AdjacentShardToMerge],
-                "end": None,
-                "hash": (
-                    min(a["hash"][0], b["hash"][0]),
-                    max(a["hash"][1], b["hash"][1]),
-                ),
-            }
-        )
         return {"ResponseMetadata": _meta()}
-
-    def list_streams(self, Limit: int = 100, ExclusiveStartStreamName: str | None = None) -> dict:
-        names = sorted(self._streams)
-        if ExclusiveStartStreamName is not None:
-            names = [n for n in names if n > ExclusiveStartStreamName]
-        page = names[:Limit]
-        return {
-            "StreamNames": page,
-            "HasMoreStreams": len(names) > len(page),
-            "ResponseMetadata": _meta(),
-        }
 
     def describe_stream(
         self,
@@ -273,100 +170,57 @@ class MockKinesisClient:
         Limit: int = 10,
         ExclusiveStartShardId: str | None = None,
     ) -> dict:
-        self._require_stream("DescribeStream", StreamName)
-        n = len(self._streams[StreamName])
-        all_ids = [SHARD_ID_FMT.format(i) for i in range(n)]
-        ids = all_ids
-        if ExclusiveStartShardId is not None:
-            ids = [sid for sid in ids if sid > ExclusiveStartShardId]
-        page = ids[:Limit]
-        shards = []
-        for sid in page:
-            i = int(sid.split("-")[1])
-            ent = self._shard_meta[StreamName][i]
-            d = {
-                "ShardId": sid,
-                "HashKeyRange": {
-                    "StartingHashKey": str(ent["hash"][0]),
-                    "EndingHashKey": str(ent["hash"][1]),
-                },
-                "SequenceNumberRange": {"StartingSequenceNumber": "0" * 21},
-            }
-            if ent["parents"]:
-                d["ParentShardId"] = ent["parents"][0]
-            if len(ent["parents"]) > 1:
-                d["AdjacentParentShardId"] = ent["parents"][1]
-            if ent["end"] is not None:
-                d["SequenceNumberRange"]["EndingSequenceNumber"] = str(
-                    max(0, ent["end"] - 1)
-                ).zfill(21)
-            shards.append(d)
-        return {
-            "StreamDescription": {
-                "StreamName": StreamName,
-                "StreamARN": f"arn:aws:kinesis:us-east-1:000000000000:stream/{StreamName}",
-                "StreamStatus": "ACTIVE",
-                "RetentionPeriodHours": 24,
-                "StreamCreationTimestamp": datetime.fromtimestamp(0, tz=timezone.utc),
-                "EnhancedMonitoring": [{"ShardLevelMetrics": []}],
-                "EncryptionType": "NONE",
-                "Shards": shards,
-                "HasMoreShards": len(ids) > len(page),
-            },
-            "ResponseMetadata": _meta(),
-        }
+        op = "DescribeStream"
+        with self._op(op):
+            if ExclusiveStartShardId is not None:
+                ExclusiveStartShardId = self._sim_shard(op, ExclusiveStartShardId)
+            desc = super().describe_stream(StreamName, Limit, ExclusiveStartShardId)
+        desc = desc["StreamDescription"]
+        for shard in desc["Shards"]:
+            for key in ("ShardId", "ParentShardId", "AdjacentParentShardId"):
+                if key in shard:
+                    shard[key] = _wire_shard(shard[key])
+            seq_range = shard["SequenceNumberRange"]
+            for key in seq_range:
+                seq_range[key] = _wire_seq(seq_range[key])
+        desc.update(
+            StreamARN=f"arn:aws:kinesis:us-east-1:000000000000:stream/{StreamName}",
+            RetentionPeriodHours=24,
+            StreamCreationTimestamp=datetime.fromtimestamp(0, tz=timezone.utc),
+            EnhancedMonitoring=[{"ShardLevelMetrics": []}],
+            EncryptionType="NONE",
+        )
+        return {"StreamDescription": desc, "ResponseMetadata": _meta()}
 
     # -- data plane --------------------------------------------------------------
     def put_records(self, StreamName: str, Records: list[dict]) -> dict:
-        self._require_stream("PutRecords", StreamName)
+        op = "PutRecords"
         if not Records:
             raise MockClientError(
-                "PutRecords",
+                op,
                 "ValidationException",
                 "1 validation error detected: Value '[]' at 'records' failed "
                 "to satisfy constraint: Member must have length greater than "
                 "or equal to 1",
             )
-        shards = self._streams[StreamName]
-        now_ms = int(self.clock() * 1000)
-        fail_every = self._partial_failure_every
-        self._partial_failure_every = None
-        results = []
-        failed = 0
-        for i, rec in enumerate(Records):
-            if fail_every and (i + 1) % fail_every == 0:
-                failed += 1
-                results.append(
-                    {
-                        "ErrorCode": "ProvisionedThroughputExceededException",
-                        "ErrorMessage": "Rate exceeded for shard "
-                        f"{SHARD_ID_FMT.format(0)} in stream {StreamName} "
-                        "under account 000000000000.",
-                    }
-                )
-                continue
-            data = rec["Data"]
-            if isinstance(data, str):
-                data = data.encode()
-            idx = self._route(StreamName, rec["PartitionKey"])
-            seq = len(shards[idx])
-            shards[idx].append(
-                {
-                    "seq": seq,
-                    "pk": rec["PartitionKey"],
-                    "data": data,
-                    "arrival_ms": now_ms,
-                }
+        every, self._partial_failure_every = self._partial_failure_every, None
+        failed = {i for i in range(len(Records)) if every and (i + 1) % every == 0}
+        with self._op(op):
+            resp = super().put_records(
+                StreamName, [r for i, r in enumerate(Records) if i not in failed]
             )
-            results.append(
-                {
-                    "SequenceNumber": str(seq).zfill(21),
-                    "ShardId": SHARD_ID_FMT.format(idx),
-                }
-            )
+        throttled = {
+            "ErrorCode": "ProvisionedThroughputExceededException",
+            "ErrorMessage": f"Rate exceeded for shard {SHARD_ID_FMT.format(0)} "
+            f"in stream {StreamName} under account 000000000000.",
+        }
+        stored = (
+            {"SequenceNumber": _wire_seq(r["SequenceNumber"]), "ShardId": _wire_shard(r["ShardId"])}
+            for r in resp["Records"]
+        )
         return {
-            "FailedRecordCount": failed,
-            "Records": results,
+            "FailedRecordCount": len(failed),
+            "Records": [dict(throttled) if i in failed else next(stored) for i in range(len(Records))],
             "EncryptionType": "NONE",
             "ResponseMetadata": _meta(),
         }
@@ -380,100 +234,25 @@ class MockKinesisClient:
         Timestamp=None,
     ) -> dict:
         op = "GetShardIterator"
-        self._require_stream(op, StreamName)
-        idx = self._shard_index(op, StreamName, ShardId)
-        records = self._streams[StreamName][idx]
-        if ShardIteratorType in ("AT_SEQUENCE_NUMBER", "AFTER_SEQUENCE_NUMBER"):
-            if StartingSequenceNumber is None:
-                raise MockClientError(
-                    op,
-                    "ValidationException",
-                    "StartingSequenceNumber is required for iterator type "
-                    f"{ShardIteratorType}",
-                )
-            seq = int(StartingSequenceNumber)
-            if ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
-                seq += 1
-        elif ShardIteratorType == "TRIM_HORIZON":
-            seq = 0
-        elif ShardIteratorType == "LATEST":
-            seq = len(records)
-        elif ShardIteratorType == "AT_TIMESTAMP":
-            if Timestamp is None:
-                raise MockClientError(
-                    op,
-                    "ValidationException",
-                    "Timestamp is required for iterator type AT_TIMESTAMP",
-                )
-            ts = Timestamp
-            if isinstance(ts, datetime):
-                if ts.tzinfo is None:
-                    ts = ts.replace(tzinfo=timezone.utc)
-                ts_ms = int(ts.timestamp() * 1000)
-            else:
-                ts_ms = int(float(ts) * 1000)
-            seq = len(records)
-            for i, r in enumerate(records):
-                if r["arrival_ms"] >= ts_ms:
-                    seq = i
-                    break
-        else:
-            raise MockClientError(
-                op,
-                "ValidationException",
-                f"1 validation error detected: Value '{ShardIteratorType}' at "
-                "'shardIteratorType' failed to satisfy constraint",
+        with self._op(op):
+            resp = super().get_shard_iterator(
+                StreamName, self._sim_shard(op, ShardId), ShardIteratorType,
+                StartingSequenceNumber, Timestamp,
             )
         return {
-            "ShardIterator": self._pack_iterator(StreamName, idx, seq),
+            "ShardIterator": self._pack_iterator(resp["ShardIterator"]),
             "ResponseMetadata": _meta(),
         }
 
     def get_records(self, ShardIterator: str, Limit: int = 1000) -> dict:
         op = "GetRecords"
-        if not 1 <= Limit <= 10000:
-            raise MockClientError(
-                op,
-                "ValidationException",
-                f"1 validation error detected: Value '{Limit}' at 'limit' "
-                "failed to satisfy constraint: Member must have value less "
-                "than or equal to 10000",
-            )
-        it = self._unpack_iterator(op, ShardIterator)
-        if self._rate_limit_armed:
-            self._rate_limit_armed = False
-            raise MockClientError(
-                op,
-                "ProvisionedThroughputExceededException",
-                f"Rate exceeded for shard {SHARD_ID_FMT.format(it['i'])} in "
-                f"stream {it['s']} under account 000000000000.",
-            )
-        self._require_stream(op, it["s"])
-        records = self._streams[it["s"]][it["i"]]
-        start = it["q"]
-        page = records[start : start + Limit]
-        next_seq = page[-1]["seq"] + 1 if page else start
-        out = [
-            {
-                "SequenceNumber": str(r["seq"]).zfill(21),
-                "PartitionKey": r["pk"],
-                "Data": r["data"],
-                "ApproximateArrivalTimestamp": datetime.fromtimestamp(
-                    r["arrival_ms"] / 1000, tz=timezone.utc
-                ),
-            }
-            for r in page
-        ]
-        # Closed shard fully drained → NextShardIterator null (the real
-        # service's end-of-shard signal; consumers fail over to children).
-        ent = self._shard_meta[it["s"]][it["i"]]
-        if ent["end"] is not None and next_seq >= ent["end"]:
-            next_it = None
-        else:
-            next_it = self._pack_iterator(it["s"], it["i"], next_seq)
+        sim_iterator = self._unpack_iterator(op, ShardIterator)
+        with self._op(op):
+            resp = super().get_records(sim_iterator, Limit)
+        for r in resp["Records"]:
+            r["SequenceNumber"] = _wire_seq(r["SequenceNumber"])
         return {
-            "Records": out,
-            "NextShardIterator": next_it,
-            "MillisBehindLatest": 1000 * max(0, len(records) - next_seq),
+            **resp,
+            "NextShardIterator": self._pack_iterator(resp["NextShardIterator"]),
             "ResponseMetadata": _meta(),
         }

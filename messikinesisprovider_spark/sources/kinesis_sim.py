@@ -3,16 +3,20 @@
 The reference tests its consumer stack against an in-process fake broker
 implementing getShardIterator/getRecords with fault injection
 (simulator/KinesisAsyncClientSimulator.java:39-254, KinesisShardStream.java).
-This is its twin, with two deliberate differences:
+This is its twin, and the only broker in the package (``kinesis_mock`` is a
+wire-shape skin over it), with two deliberate differences:
 
 * **File-backed state.** Spark's Python DataSource planning and reading run
   in separate forked worker processes, so an in-memory fake would be invisible
   to them. All broker state lives under a state directory: any process that
   constructs ``FakeKinesisClient(statedir)`` sees the same streams — which is
   exactly how the real broker behaves across a cluster.
-* **Multi-shard streams.** The reference simulator supports a single shard
-  (KinesisAsyncClientSimulator.java:85-87); we route put_records by an md5 of
-  the partition key across N shards, matching the real service's contract.
+* **Multi-shard streams with resharding.** The reference simulator supports a
+  single shard (KinesisAsyncClientSimulator.java:85-87). Here CreateStream
+  splits the 128-bit hash space into equal ranges, put_records routes each
+  record by the md5 point of its partition key over the OPEN shards' ranges
+  (the real service's contract), and SplitShard / MergeShards close parents
+  and hand their ranges to children, so every key stays on one lineage.
 
 Iterator format: ``"<shard_id>;<seq12>;<epoch>"`` (reference's
 ``shardId;sequenceNumber`` plus an epoch, KinesisAsyncClientSimulator.java:
@@ -63,6 +67,10 @@ class InvalidArgument(SimulatorError):
     error_code = "InvalidArgumentException"
 
 
+class ValidationError(SimulatorError):
+    error_code = "ValidationException"
+
+
 MAX_HASH_KEY = (1 << 128) - 1
 
 
@@ -72,14 +80,14 @@ _SHARD_PARSE_CACHE: dict[str, tuple[int, list[dict]]] = {}
 _SHARD_PARSE_CACHE_MAX = 16
 
 
-def _shard_for_key(pk: str, n_shards: int) -> str:
-    h = int.from_bytes(hashlib.md5((pk or "").encode()).digest()[:8], "big")
-    return str(h % n_shards)
-
-
-def _hash_point(pk: str) -> int:
-    """128-bit md5 routing point — the documented PutRecords contract."""
-    return int.from_bytes(hashlib.md5((pk or "").encode()).digest(), "big")
+def _route(open_ranges: list[tuple[int, int, str]], pk: str) -> str:
+    """The open shard whose hash range covers the 128-bit md5 point of a
+    partition key — the documented PutRecords contract."""
+    point = int.from_bytes(hashlib.md5((pk or "").encode()).digest(), "big")
+    for lo, hi, sid in open_ranges:
+        if lo <= point <= hi:
+            return sid
+    raise InvalidArgument(f"no open shard covers hash point of '{pk}'")
 
 
 class FakeKinesisClient:
@@ -151,37 +159,20 @@ class FakeKinesisClient:
     def _streams(self) -> dict:
         return self._load(self._streams_path(), {})
 
-    # -- reshard metadata ----------------------------------------------------
+    # -- shard metadata ------------------------------------------------------
     # streams.json keeps its {name: [shard_id, ...]} shape (tests append to
-    # it directly); shard lineage/closure/hash-ranges live in a sidecar that
-    # exists only once a stream has been resharded. A shard absent from the
-    # sidecar of a resharded stream never happens (the first split/merge
-    # materializes entries for every existing shard); a stream without a
-    # sidecar behaves exactly as before round 6 (legacy md5%n routing, no
-    # closed shards) so resharding is zero-risk for unresharded streams.
+    # it directly); each shard's lineage, closure and hash range live in the
+    # reshard_<stream>.json sidecar that create_stream writes. A shard listed
+    # in streams.json but absent from the sidecar (a test poking a shard in)
+    # is readable, parentless and open, but receives no routed records.
     def _reshard_path(self, stream: str) -> str:
         return os.path.join(self.statedir, f"reshard_{stream}.json")
 
-    def _reshard(self, stream: str) -> dict | None:
-        return self._load(self._reshard_path(stream), None)
-
-    def _materialize_reshard(self, stream: str, shards: list[str]) -> dict:
-        """First split/merge on a stream: give every existing shard an equal
-        slice of the 128-bit hash space (the real service's CreateStream
-        layout), open, parentless."""
-        meta = self._reshard(stream)
-        if meta is not None:
-            return meta
-        n = len(shards)
-        width = (MAX_HASH_KEY + 1) // n
-        meta = {}
-        for i, sid in enumerate(shards):
-            hi = (i + 1) * width - 1 if i < n - 1 else MAX_HASH_KEY
-            meta[sid] = {"parents": [], "end_count": None, "hash": [str(i * width), str(hi)]}
-        return meta
+    def _reshard(self, stream: str) -> dict:
+        return self._load(self._reshard_path(stream), {})
 
     def _next_shard_ids(self, shards: list[str], k: int) -> list[str]:
-        base = max((int(s) for s in shards if s.isdigit()), default=len(shards) - 1) + 1
+        base = max(int(s) for s in shards) + 1
         return [str(base + i) for i in range(k)]
 
     def _faults(self) -> dict:
@@ -202,6 +193,16 @@ class FakeKinesisClient:
     def create_stream(self, StreamName: str, ShardCount: int = 1) -> dict:
         streams = self._streams()
         if StreamName not in streams:
+            # the real service's layout: equal slices of the 128-bit hash
+            # space, open and parentless (sidecar before the stream appears)
+            width = (MAX_HASH_KEY + 1) // ShardCount
+            self._store(self._reshard_path(StreamName), {
+                str(i): {"parents": [], "end_count": None, "hash": [
+                    str(i * width),
+                    str((i + 1) * width - 1 if i < ShardCount - 1 else MAX_HASH_KEY),
+                ]}
+                for i in range(ShardCount)
+            })
             streams[StreamName] = [str(i) for i in range(ShardCount)]
             self._store(self._streams_path(), streams)
             os.makedirs(os.path.join(self.statedir, f"stream_{StreamName}"), exist_ok=True)
@@ -235,14 +236,17 @@ class FakeKinesisClient:
         if StreamName not in streams:
             raise ResourceNotFound(f"streamName does not exist: '{StreamName}'")
         shards = streams[StreamName]
-        if ShardToSplit not in shards:
+        meta = self._reshard(StreamName)
+        if ShardToSplit not in meta:
             raise ResourceNotFound(f"stream does not contain shardId: '{ShardToSplit}'")
-        meta = self._materialize_reshard(StreamName, shards)
         ent = meta[ShardToSplit]
         if ent["end_count"] is not None:
             raise InvalidArgument(f"Shard {ShardToSplit} is not OPEN")
         lo, hi = int(ent["hash"][0]), int(ent["hash"][1])
-        key = int(NewStartingHashKey)
+        try:
+            key = int(NewStartingHashKey)
+        except (TypeError, ValueError):
+            raise ValidationError(f"Invalid NewStartingHashKey: {NewStartingHashKey}")
         if not lo < key <= hi:
             raise InvalidArgument(
                 f"NewStartingHashKey {NewStartingHashKey} is not within the "
@@ -270,10 +274,10 @@ class FakeKinesisClient:
         if StreamName not in streams:
             raise ResourceNotFound(f"streamName does not exist: '{StreamName}'")
         shards = streams[StreamName]
+        meta = self._reshard(StreamName)
         for sid in (ShardToMerge, AdjacentShardToMerge):
-            if sid not in shards:
+            if sid not in meta:
                 raise ResourceNotFound(f"stream does not contain shardId: '{sid}'")
-        meta = self._materialize_reshard(StreamName, shards)
         a, b = meta[ShardToMerge], meta[AdjacentShardToMerge]
         if a["end_count"] is not None or b["end_count"] is not None:
             raise InvalidArgument("both shards must be OPEN to merge")
@@ -306,17 +310,16 @@ class FakeKinesisClient:
     ) -> dict:
         # Honors Limit / ExclusiveStartShardId / HasMoreShards like real
         # Kinesis, so TCK tests with >10 shards exercise the pagination loop
-        # (KinesisUtils.java:63-96). Shard ids sort lexicographically here
-        # (zero-base integer names stay ordered within a page window because
-        # pagination compares the ids the simulator itself handed out).
+        # (KinesisUtils.java:63-96). Shard ids order numerically — the order
+        # of the real service's zero-padded ids.
         streams = self._streams()
         if StreamName not in streams:
             raise ResourceNotFound(f"Stream does not exist: {StreamName}")
-        shards = sorted(streams[StreamName])
+        shards = sorted(streams[StreamName], key=int)
         if ExclusiveStartShardId is not None:
-            shards = [sid for sid in shards if sid > ExclusiveStartShardId]
+            shards = [sid for sid in shards if int(sid) > int(ExclusiveStartShardId)]
         page = shards[:Limit]
-        meta = self._reshard(StreamName) or {}
+        meta = self._reshard(StreamName)
         out = []
         for sid in page:
             ent = meta.get(sid)
@@ -423,27 +426,12 @@ class FakeKinesisClient:
         if StreamName not in streams:
             raise ResourceNotFound(f"streamName does not exist: '{StreamName}'")
         shards = streams[StreamName]
-        meta = self._reshard(StreamName)
-        if meta is not None:
-            # resharded stream: route by 128-bit hash point over OPEN shards
-            # (closed parents accept no new records — the AWS contract)
-            open_ranges = [
-                (int(ent["hash"][0]), int(ent["hash"][1]), sid)
-                for sid, ent in meta.items()
-                if ent["end_count"] is None
-            ]
-
-            def route(pk: str) -> str:
-                point = _hash_point(pk)
-                for lo, hi, sid in open_ranges:
-                    if lo <= point <= hi:
-                        return sid
-                raise InvalidArgument(f"no open shard covers hash point of '{pk}'")
-        else:
-
-            def route(pk: str) -> str:
-                return _shard_for_key(pk, len(shards))
-
+        # closed parents accept no new records — the AWS contract
+        open_ranges = [
+            (int(ent["hash"][0]), int(ent["hash"][1]), sid)
+            for sid, ent in self._reshard(StreamName).items()
+            if ent["end_count"] is None
+        ]
         now_ms = int(self.clock() * 1000)
         results = []
         appends: dict[str, list[dict]] = {}
@@ -452,7 +440,7 @@ class FakeKinesisClient:
             data = rec["Data"]
             if isinstance(data, str):
                 data = data.encode()
-            sid = route(rec["PartitionKey"])
+            sid = _route(open_ranges, rec["PartitionKey"])
             seq = format_sequence(counts[sid])
             counts[sid] += 1
             appends.setdefault(sid, []).append(
@@ -501,15 +489,19 @@ class FakeKinesisClient:
         if ShardId not in streams[StreamName]:
             raise ResourceNotFound(f"stream does not contain shardId: '{ShardId}'")
         records = self._read_shard(StreamName, ShardId)
-        if ShardIteratorType == "AT_SEQUENCE_NUMBER":
-            seq = int(StartingSequenceNumber)
-        elif ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
-            seq = int(StartingSequenceNumber) + 1
+        if ShardIteratorType in ("AT_SEQUENCE_NUMBER", "AFTER_SEQUENCE_NUMBER"):
+            if StartingSequenceNumber is None:
+                raise ValidationError(
+                    f"StartingSequenceNumber is required for iterator type {ShardIteratorType}"
+                )
+            seq = int(StartingSequenceNumber) + (ShardIteratorType == "AFTER_SEQUENCE_NUMBER")
         elif ShardIteratorType == "TRIM_HORIZON":
             seq = 0
         elif ShardIteratorType == "LATEST":
             seq = len(records)
         elif ShardIteratorType == "AT_TIMESTAMP":
+            if Timestamp is None:
+                raise ValidationError("Timestamp is required for iterator type AT_TIMESTAMP")
             ts = Timestamp
             if isinstance(ts, datetime):
                 if ts.tzinfo is None:
@@ -523,13 +515,13 @@ class FakeKinesisClient:
                     seq = i
                     break
         else:
-            raise ValueError(f"shardIteratorType unknown: {ShardIteratorType}")
+            raise ValidationError(f"shardIteratorType unknown: {ShardIteratorType}")
         epoch = self._faults().get("epoch", 0)
         return {"ShardIterator": f"{StreamName}|{ShardId};{format_sequence(seq)};{epoch}"}
 
     def get_records(self, ShardIterator: str, Limit: int = 1000) -> dict:
         if not 1 <= Limit <= 10000:
-            raise ValueError("limit must be between 1 and 10000")
+            raise ValidationError(f"limit must be between 1 and 10000, got {Limit}")
         with self._lock():
             return self._get_records_locked(ShardIterator, Limit)
 
@@ -562,8 +554,7 @@ class FakeKinesisClient:
         ]
         # Closed shard fully drained → NextShardIterator null (the AWS
         # end-of-shard signal consumers fail over to the children on).
-        meta = self._reshard(stream)
-        ent = (meta or {}).get(shard_id)
+        ent = self._reshard(stream).get(shard_id)
         if ent and ent["end_count"] is not None and next_seq >= ent["end_count"]:
             next_it = None
         else:

@@ -24,6 +24,7 @@ mapped from the cursor types P1-P4); nothing downstream changes.
 
 from __future__ import annotations
 
+import os
 import tempfile
 from contextlib import contextmanager
 
@@ -50,8 +51,14 @@ def stream_log(
     so one availableNow pass is exactly one batch. Build the frame after
     the first file lands: the `shard_id` partition column is inferred from
     the files present when it is created (over an empty root, shard_id
-    becomes a data column and the drain fails to encode rows).
+    would become a data column and the drain would fail to encode rows), so
+    a root without `shard_id=` dirs raises ValueError here.
     """
+    if not (os.path.isdir(root) and any(n.startswith("shard_id=") for n in os.listdir(root))):
+        raise ValueError(
+            f"no shard_id=<k> partition dirs under {root}: build the stream "
+            "after the first file lands in the log"
+        )
     df = (
         spark.readStream.schema(LOG_SCHEMA)
         .option("maxFilesPerTrigger", files_per_trigger)

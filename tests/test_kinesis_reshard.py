@@ -100,6 +100,33 @@ def test_sim_merge_validates_adjacency_and_routes_to_child(tmp_path):
     assert client._shard_count("s", "1") == 0
 
 
+def test_sim_key_stays_on_one_lineage_across_split(tmp_path):
+    """A key is routed by its hash range from CreateStream on, so a split
+    moves it only from the parent to a child — never to an unrelated shard,
+    which would leave parent-before-child unable to order its records."""
+    import hashlib
+
+    key = "user-2"
+    digest = hashlib.md5(key.encode()).digest()
+    # the hash range puts the key on shard 0; an md5[:8] % 2 rule would not
+    assert int.from_bytes(digest, "big") < 1 << 127
+    assert int.from_bytes(digest[:8], "big") % 2 == 1
+    client = kinesis_sim.FakeKinesisClient(str(tmp_path / "b"))
+    client.create_stream(StreamName="s", ShardCount=2)
+
+    def put() -> str:
+        resp = client.put_records(
+            StreamName="s", Records=[{"PartitionKey": key, "Data": _payload(key)}]
+        )
+        return resp["Records"][0]["ShardId"]
+
+    before = put()
+    client.split_shard(StreamName="s", ShardToSplit="0", NewStartingHashKey=str(1 << 126))
+    after = put()
+    parents = {s["ShardId"]: s.get("ParentShardId") for s in list_shards(client, "s")}
+    assert after == before or parents[after] == before
+
+
 def test_mock_split_merge_botocore_shapes():
     client = MockKinesisClient()
     client.create_stream(StreamName="s", ShardCount=2)

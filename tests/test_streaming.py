@@ -7,9 +7,11 @@ from datetime import datetime, timedelta, timezone
 import pytest
 from pyspark.sql import functions as F
 
+from messikinesisprovider_spark import wire
 from messikinesisprovider_spark.cursor import MessiCursor
 from messikinesisprovider_spark.log import MessiLog
-from messikinesisprovider_spark.sources.simulator import BrokerSimulator, RateLimitExceeded
+from messikinesisprovider_spark.sources.kinesis import KinesisTransport
+from messikinesisprovider_spark.sources.kinesis_mock import SHARD_ID_FMT, MockKinesisClient
 from messikinesisprovider_spark.streaming import consume
 from messikinesisprovider_spark.streaming.sink import (
     PartialFailure,
@@ -70,6 +72,11 @@ def test_stream_unresolvable_cursor_raises(spark, seeded_log):
         consume.stream_log(spark, seeded_log.root, cur)
 
 
+def test_stream_log_over_empty_root_names_missing_partitions(spark, tmp_path):
+    with pytest.raises(ValueError, match="shard_id="):
+        consume.stream_log(spark, str(tmp_path))
+
+
 def test_effectively_once_drops_replayed_ulids(spark, tmp_path):
     log = MessiLog(spark, str(tmp_path / "dlog"), n_shards=1)
     [m] = log.publish("t", [{"partition_key": "pk", "external_id": "dup"}], now=T0)
@@ -126,13 +133,38 @@ def test_session_windows(spark, tmp_path):
 # --- sink retry loop (KinesisMessiProducer.java:103-160) --------------------
 
 
+def _broker(n_shards: int) -> MockKinesisClient:
+    client = MockKinesisClient()
+    client.create_stream(StreamName="s", ShardCount=n_shards)
+    return client
+
+
+def _wire(records: list[dict]) -> list[dict]:
+    return [
+        {"partition_key": r["partition_key"], "payload": wire.encode_message(r)}
+        for r in records
+    ]
+
+
+def _stored_ids(client: MockKinesisClient, n_shards: int) -> list[str]:
+    """External ids on the broker, shard by shard in sequence order."""
+    ids = []
+    for i in range(n_shards):
+        it = client.get_shard_iterator(
+            StreamName="s", ShardId=SHARD_ID_FMT.format(i), ShardIteratorType="TRIM_HORIZON"
+        )["ShardIterator"]
+        records = client.get_records(ShardIterator=it)["Records"]
+        ids += [wire.decode_message(r["Data"])["external_id"] for r in records]
+    return ids
+
+
 def test_publish_retry_resends_only_failed_subset():
-    sim = BrokerSimulator(n_shards=1)
-    records = [{"partition_key": "pk", "external_id": str(i)} for i in range(5)]
-    sim.fail_indices_next = [1, 3]
-    rounds = publish_with_retry(records, sim.put_records)
+    client = _broker(1)
+    records = _wire([{"partition_key": "pk", "external_id": str(i)} for i in range(5)])
+    client.arm_partial_failure(every=2)  # the first round fails indices 1 and 3
+    rounds = publish_with_retry(records, KinesisTransport("s", client=client))
     assert rounds == 2
-    stored = [r["external_id"] for r in sim.all_records()]
+    stored = _stored_ids(client, 1)
     # 0,2,4 landed first; 1,3 landed on retry — reordering hazard is the
     # documented contract (KinesisMessiProducer.java:112)
     assert sorted(stored) == ["0", "1", "2", "3", "4"]
@@ -151,29 +183,22 @@ def test_publish_retry_gives_up_after_max_rounds():
     assert calls["n"] == 3
 
 
-def test_rate_limit_surfaces(spark):
-    sim = BrokerSimulator()
-    sim.rate_limit_next = True
-    with pytest.raises(RateLimitExceeded):
-        sim.put_records([{"partition_key": "pk"}])
-    # next call succeeds (flag auto-clears, like the reference simulator)
-    sim.put_records([{"partition_key": "pk"}])
-    assert len(sim.all_records()) == 1
-
-
 def test_foreach_batch_publisher_end_to_end(spark, seeded_log, tmp_path):
     from messikinesisprovider_spark.streaming.sink import foreach_batch_publisher
 
-    sim = BrokerSimulator(n_shards=2)
+    client = _broker(2)
+    transport = KinesisTransport("s", client=client)
     q = (
         consume.stream_log(spark, seeded_log.root)
-        .writeStream.foreachBatch(foreach_batch_publisher(lambda: sim.put_records))
+        .writeStream.foreachBatch(
+            foreach_batch_publisher(lambda: lambda batch: transport(_wire(batch)))
+        )
         .option("checkpointLocation", str(tmp_path / "sink_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    assert sorted(r["external_id"] for r in sim.all_records()) == ["a", "b", "c", "d"]
+    assert sorted(_stored_ids(client, 2)) == ["a", "b", "c", "d"]
 
 
 def test_foreach_partition_publisher_executor_side(spark, seeded_log, tmp_path):
