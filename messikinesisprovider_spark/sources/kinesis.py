@@ -20,17 +20,13 @@ raises a clear error, and the rest of the engine never imports this module.
 
 from __future__ import annotations
 
-from datetime import timedelta
+import importlib.util
 
 from ..cursor import CursorType, MessiCursor
 
-try:  # pragma: no cover - exercised only with the AWS SDK present
-    import boto3  # type: ignore
-
-    HAVE_BOTO3 = True
-except ImportError:  # pragma: no cover
-    boto3 = None
-    HAVE_BOTO3 = False
+# boto3 takes ~0.2 s to import; it is imported only where a real AWS client is
+# built (KinesisTransport, kinesis_source._make_client without clientfactory)
+HAVE_BOTO3 = importlib.util.find_spec("boto3") is not None
 
 
 class KinesisUnavailable(RuntimeError):
@@ -79,6 +75,8 @@ class KinesisTransport:
         if client is None:
             if not HAVE_BOTO3:
                 raise KinesisUnavailable()
+            import boto3
+
             client = boto3.client("kinesis")
         self.client = client
         self.stream_name = stream_name
@@ -241,12 +239,21 @@ class KinesisShardConsumer:
     - F6 error isolation: any other error retries after one poll interval
       (reference :136-140).
 
+    The buffer holds RAW GetRecords records: F1 counts raw records, and a
+    record is decoded (wire.decode_message + provenance stamping) only when
+    poll()/receive()/drain() hands it out. A seek therefore costs one decode,
+    not one per record of the page it fetched. A record that fails to decode
+    stays at the head of the buffer, so the next delivery raises on it again
+    instead of silently skipping it.
+
     AT_ULID / AT_EXTERNAL_ID cursors seek AT_TIMESTAMP at (t - tolerance) and
     the residual position is applied client-side with the reference's
     lookahead-buffer state machine (KinesisMessiStreamingConsumer.java:60-160):
     an exact match positions precisely (inclusive/exclusive); if the upper
     tolerance bound passes without a match, delivery replays from the
-    lookahead buffer (fallback replay, same as MessiLog P5/P6).
+    lookahead buffer (fallback replay, same as MessiLog P5/P6). The scan
+    peeks at two envelope fields per record (wire.peek_ids: ULID halves and
+    external_id) and keeps the lookahead raw as well.
 
     `clock`/`sleep` are injectable so tests drive backoff deterministically.
     """
@@ -273,7 +280,7 @@ class KinesisShardConsumer:
         self.clock = clock or _time.monotonic
         self.sleep = sleep or _time.sleep
         self.cursor = cursor or MessiCursor.oldest()
-        self.buffer: deque = deque()
+        self.buffer: deque = deque()  # raw GetRecords records
         self.closed = False
         # Resharding: set when GetRecords returns a null NextShardIterator —
         # the shard was closed by a split/merge and is fully drained; no
@@ -293,7 +300,7 @@ class KinesisShardConsumer:
             CursorType.AT_ULID,
             CursorType.AT_EXTERNAL_ID,
         )
-        self._lookahead: deque = deque()
+        self._lookahead: deque = deque()  # raw records, like the buffer
         self._buffering = False
 
     # -- iterator resolution ------------------------------------------------
@@ -314,9 +321,6 @@ class KinesisShardConsumer:
         return resp["ShardIterator"]
 
     # -- fill loop ----------------------------------------------------------
-    def _decode(self, rec: dict) -> dict:
-        return decode_record(rec, self.shard_id)
-
     def fill_once(self) -> bool:
         """One GetRecords attempt; returns True if a request was issued.
         The error ladder is the reference's response handler
@@ -355,8 +359,7 @@ class KinesisShardConsumer:
         else:
             # null NextShardIterator: closed shard (split/merge) fully read.
             self.shard_ended = True
-            for rec in records:
-                self.buffer.append(self._decode(rec))
+            self.buffer.extend(records)
             if records:
                 self._last_seq = records[-1]["SequenceNumber"]
                 self.total_fetched += len(records)
@@ -369,22 +372,21 @@ class KinesisShardConsumer:
             else:
                 self._next_fetch_at = now  # catching up: refetch immediately
             return True
-        for rec in records:
-            self.buffer.append(self._decode(rec))
+        self.buffer.extend(records)
         self._last_seq = records[-1]["SequenceNumber"]
         self.total_fetched += len(records)
         self._next_fetch_at = now
         return True
 
-    def poll(self, timeout_s: float = 0.0) -> dict | None:
-        """Next raw buffered message within `timeout_s` (blocking receive,
-        F8 twin of KinesisStreamingBuffer.poll :74-79), else None."""
+    # -- delivery -----------------------------------------------------------
+    def _head(self, deadline: float) -> dict | None:
+        """Fill until a raw record heads the buffer (returned, NOT popped)
+        or the deadline passes (None)."""
         if self.closed:
             raise RuntimeError("KinesisShardConsumer is closed")
-        deadline = self.clock() + timeout_s
         while True:
             if self.buffer:
-                return self.buffer.popleft()
+                return self.buffer[0]
             if self.shard_ended:
                 return None  # closed shard fully drained: nothing will arrive
             now = self.clock()
@@ -399,55 +401,70 @@ class KinesisShardConsumer:
             if not self.buffer and self.clock() >= deadline:
                 return None
 
+    def _deliver(self, queue) -> dict:
+        """Decode the head of `queue`, then pop it: a record that fails to
+        decode stays at the head."""
+        msg = decode_record(queue[0], self.shard_id)
+        queue.popleft()
+        return msg
+
+    def poll(self, timeout_s: float = 0.0) -> dict | None:
+        """Next buffered message within `timeout_s` (blocking receive, F8
+        twin of KinesisStreamingBuffer.poll :74-79), else None."""
+        if self._head(self.clock() + timeout_s) is None:
+            return None
+        return self._deliver(self.buffer)
+
+    def drain(self):
+        """Decoded messages of everything already buffered, in order; no
+        fetch (the simple reader's per-microbatch hand-off after fill_once)."""
+        while self.buffer:
+            yield self._deliver(self.buffer)
+
     # -- residual positioning (KinesisMessiStreamingConsumer.java:60-160) ---
     def receive(self, timeout_s: float = 0.0) -> dict | None:
         """Next message at/after the cursor position."""
-        from ..ulid import Ulid
+        from .. import wire
 
         deadline = self.clock() + timeout_s
-        while not self._position_reached:
-            m = self.poll(max(0.0, deadline - self.clock()))
-            if m is None:
-                return None
-            ulid_ts = Ulid.from_parts(m["ulid_msb"], m["ulid_lsb"]).timestamp_ms
+        if not self._position_reached:
             tol_ms = self.cursor.tolerance.total_seconds() * 1000
-            if self.cursor.type is CursorType.AT_ULID:
+            by_ulid = self.cursor.type is CursorType.AT_ULID
+            # the lookahead opens at lo_ms; fallback replay once hi_ms passes
+            if by_ulid:
                 target = self.cursor.ulid
-                if m.get("ulid") == target.text():
-                    self._lookahead.clear()
-                    self._buffering = False
-                    self._position_reached = True
-                    if self.cursor.inclusive:
-                        return m
-                    break
-                if self._buffering:
-                    self._lookahead.append(m)
-                elif target.timestamp_ms <= ulid_ts:
-                    self._buffering = True
-                    self._lookahead.append(m)
-                if target.timestamp_ms + tol_ms < ulid_ts:
-                    self._position_reached = True  # fallback replay
-                    break
+                want = (target.msb, target.lsb)
+                lo_ms = target.timestamp_ms
+                hi_ms = lo_ms + tol_ms
             else:  # AT_EXTERNAL_ID
+                want = self.cursor.external_id
                 anchor_ms = self.cursor.timestamp.timestamp() * 1000
-                if m.get("external_id") == self.cursor.external_id:
-                    self._lookahead.clear()
-                    self._buffering = False
-                    self._position_reached = True
-                    if self.cursor.inclusive:
-                        return m
-                    break
-                if self._buffering:
-                    self._lookahead.append(m)
-                elif anchor_ms - tol_ms <= ulid_ts:
-                    self._buffering = True
-                    self._lookahead.append(m)
-                if anchor_ms + tol_ms < ulid_ts:
-                    self._position_reached = True  # fallback replay
-                    break
+                lo_ms, hi_ms = anchor_ms - tol_ms, anchor_ms + tol_ms
+        while not self._position_reached:
+            rec = self._head(deadline)
+            if rec is None:
+                return None
+            msb, lsb, external_id = wire.peek_ids(bytes(rec["Data"]))
+            if ((msb, lsb) if by_ulid else external_id) == want:
+                self._lookahead.clear()
+                self._buffering = False
+                self._position_reached = True
+                if self.cursor.inclusive:
+                    return self._deliver(self.buffer)
+                self.buffer.popleft()
+                break
+            self.buffer.popleft()
+            # ULID timestamp = top 48 of the 128 bits = unsigned msb >> 16
+            ulid_ts = 0 if msb is None else (msb & 0xFFFFFFFFFFFFFFFF) >> 16
+            if self._buffering or lo_ms <= ulid_ts:
+                self._buffering = True
+                self._lookahead.append(rec)
+            if hi_ms < ulid_ts:
+                self._position_reached = True  # fallback replay
+                break
         if self._buffering:
             if self._lookahead:
-                return self._lookahead.popleft()
+                return self._deliver(self._lookahead)
             self._buffering = False
         return self.poll(max(0.0, deadline - self.clock()))
 

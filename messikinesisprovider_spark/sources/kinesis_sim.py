@@ -422,10 +422,8 @@ class FakeKinesisClient:
             return self._put_records_locked(StreamName, Records)
 
     def _put_records_locked(self, StreamName: str, Records: list[dict]) -> dict:
-        streams = self._streams()
-        if StreamName not in streams:
+        if StreamName not in self._streams():
             raise ResourceNotFound(f"streamName does not exist: '{StreamName}'")
-        shards = streams[StreamName]
         # closed parents accept no new records — the AWS contract
         open_ranges = [
             (int(ent["hash"][0]), int(ent["hash"][1]), sid)
@@ -435,12 +433,14 @@ class FakeKinesisClient:
         now_ms = int(self.clock() * 1000)
         results = []
         appends: dict[str, list[dict]] = {}
-        counts = {sid: self._shard_count(StreamName, sid) for sid in shards}
+        counts: dict[str, int] = {}  # only the shards this call routes to
         for rec in Records:
             data = rec["Data"]
             if isinstance(data, str):
                 data = data.encode()
             sid = _route(open_ranges, rec["PartitionKey"])
+            if sid not in counts:
+                counts[sid] = self._shard_count(StreamName, sid)
             seq = format_sequence(counts[sid])
             counts[sid] += 1
             appends.setdefault(sid, []).append(

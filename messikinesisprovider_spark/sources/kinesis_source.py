@@ -235,8 +235,7 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
                 last = start.get(sid, "")
                 c = self._consumer(sid, last)
                 c.fill_once()  # respects F1 space, F3 pacing, F4/F5 backoff
-                while c.buffer:
-                    msg = c.buffer.popleft()
+                for msg in c.drain():
                     rows.append(_to_row(msg, self.topic))
                     last = msg["provider"]["sequence_number"]
                 end[sid] = last

@@ -24,7 +24,9 @@ mapped from the cursor types P1-P4); nothing downstream changes.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from contextlib import contextmanager
 
@@ -136,6 +138,24 @@ def session_windows(
             "n_messages",
         )
     )
+
+
+_SESSION_DIRS: list[str] = []
+
+
+@atexit.register
+def _remove_session_dirs() -> None:
+    for d in _SESSION_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def session_tempdir(prefix: str) -> str:
+    """A temp dir for a per-session staging cache (a staged events log or
+    broker statedir reused by every topology of the session): it outlives
+    every drain and is removed at interpreter exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SESSION_DIRS.append(d)
+    return d
 
 
 def run_available_now(

@@ -14,7 +14,6 @@ actual source/trigger/watermark machinery.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,8 +55,9 @@ def _staged_events_log(spark: SparkSession, sf_dir: str) -> str:
     from ..log import MessiLog, ingest_dataframe
     from ..operators.relational import events_tbl
     from datetime import datetime, timezone
+    from .consume import session_tempdir
 
-    root = os.path.join(tempfile.mkdtemp(prefix="messilog_events_"), "log")
+    root = os.path.join(session_tempdir("messilog_events_"), "log")
     log = MessiLog(spark, root, n_shards=4)
     src = events_tbl(spark, sf_dir).select(
         pk_encode(F.col("user_id")).alias("partition_key"),

@@ -193,8 +193,9 @@ def _staged_kinesis(spark: SparkSession, sf_dir: str) -> str:
     from .. import wire
     from ..operators.relational import events_tbl
     from ..sources.kinesis_sim import FakeKinesisClient
+    from .consume import session_tempdir
 
-    statedir = tempfile.mkdtemp(prefix="kinesis_sim_")
+    statedir = session_tempdir("kinesis_sim_")
     client = FakeKinesisClient(statedir)
     client.create_stream(StreamName="events", ShardCount=4)
     rows = (

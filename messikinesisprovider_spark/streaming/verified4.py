@@ -47,8 +47,9 @@ def _staged_events_log_sentinel(spark: SparkSession, sf_dir: str) -> str:
 
     from ..log import MessiLog, ingest_dataframe
     from ..operators.relational import events_tbl
+    from .consume import session_tempdir
 
-    root = os.path.join(tempfile.mkdtemp(prefix="messilog_events_wm_"), "log")
+    root = os.path.join(session_tempdir("messilog_events_wm_"), "log")
     log = MessiLog(spark, root, n_shards=4)
     ev = events_tbl(spark, sf_dir)
     src = ev.select(

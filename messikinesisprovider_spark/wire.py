@@ -112,6 +112,62 @@ def _read_uvarint(buf: bytes, i: int) -> tuple[int, int]:
     return v & ((1 << 64) - 1), i
 
 
+_NAMES = {v: k for k, v in _FIELDS.items()}
+
+
+def _next_field(buf: bytes, i: int) -> tuple[int, bytes | int | None, int]:
+    """The top-level field at offset `i` → (field number, value, next
+    offset). The value is the payload bytes of a length-delimited field, the
+    int of a varint, and None for a fixed64/fixed32 field, which no known
+    field uses (skipped: forward compatibility)."""
+    key, i = _read_uvarint(buf, i)
+    field, wt = key >> 3, key & 0x7
+    if wt == _WT_LEN:
+        ln, i = _read_uvarint(buf, i)
+        return field, buf[i : i + ln], i + ln
+    if wt == _WT_VARINT:
+        val, i = _read_varint(buf, i)
+        return field, val, i
+    if wt == 1:
+        return field, None, i + 8
+    if wt == 5:
+        return field, None, i + 4
+    raise ValueError(f"unsupported wire type {wt}")
+
+
+def _ulid_parts(payload: bytes) -> tuple[int, int]:
+    """Nested ULID message → its signed int64 (msb, lsb) halves."""
+    j = 0
+    msb = lsb = 0
+    while j < len(payload):
+        k2, j = _read_uvarint(payload, j)
+        v2, j = _read_varint(payload, j)
+        if k2 >> 3 == 1:
+            msb = v2
+        elif k2 >> 3 == 2:
+            lsb = v2
+    return msb, lsb
+
+
+def peek_ids(buf: bytes) -> tuple[int | None, int | None, str]:
+    """The two envelope fields cursor positioning compares, read without
+    decoding the rest of the message: (ulid_msb, ulid_lsb, external_id).
+    The ULID halves are signed int64 as in decode_message, or None when the
+    envelope carries no ULID; external_id is "" when absent."""
+    msb = lsb = None
+    external_id = ""
+    i = 0
+    while i < len(buf):
+        field, val, i = _next_field(buf, i)
+        if val is None:
+            continue
+        if field == _FIELDS["ulid"]:
+            msb, lsb = _ulid_parts(val)
+        elif field == _FIELDS["external_id"]:
+            external_id = val.decode()
+    return msb, lsb, external_id
+
+
 def decode_message(buf: bytes) -> dict:
     """protobuf wire bytes → dict; unknown fields are skipped (mergeFrom
     semantics: forward-compatible).
@@ -133,38 +189,13 @@ def decode_message(buf: bytes) -> dict:
         "source_client_id": "",
     }
     i = 0
-    rev = {v: k for k, v in _FIELDS.items()}
     while i < len(buf):
-        key, i = _read_uvarint(buf, i)
-        field, wt = key >> 3, key & 0x7
-        if wt == _WT_LEN:
-            ln, i = _read_uvarint(buf, i)
-            payload = buf[i : i + ln]
-            i += ln
-        elif wt == _WT_VARINT:
-            val, i = _read_varint(buf, i)
-            payload = None
-        elif wt == 1:  # fixed64: no known field uses it — skip 8 bytes
-            i += 8
-            continue
-        elif wt == 5:  # fixed32: skip 4 bytes (forward compatibility)
-            i += 4
-            continue
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
-        name = rev.get(field)
-        if name is None:
-            continue  # unknown field: skip
+        field, payload, i = _next_field(buf, i)
+        name = _NAMES.get(field)
+        if name is None or payload is None:
+            continue  # unknown or fixed-width field: skip
         if name == "ulid":
-            j = 0
-            msb = lsb = 0
-            while j < len(payload):
-                k2, j = _read_uvarint(payload, j)
-                v2, j = _read_varint(payload, j)
-                if k2 >> 3 == 1:
-                    msb = v2
-                elif k2 >> 3 == 2:
-                    lsb = v2
+            msb, lsb = _ulid_parts(payload)
             msg["ulid_msb"], msg["ulid_lsb"] = msb, lsb
             msg["ulid"] = Ulid.from_parts(msb, lsb).text()
         elif name == "ordering":
@@ -191,7 +222,7 @@ def decode_message(buf: bytes) -> dict:
             else:
                 msg["attributes"][key_s] = k_v.get(2, b"").decode()
         elif name == "timestamp_ms":
-            msg["timestamp_ms"] = val
+            msg["timestamp_ms"] = payload
         else:
             msg[name] = payload.decode()
     return msg

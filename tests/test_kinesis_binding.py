@@ -2,13 +2,18 @@
 no AWS). Mirrors the iterator-type mapping the reference implements
 (KinesisStreamingBuffer.java:247-281)."""
 
+import os
+import subprocess
+import sys
 from datetime import datetime, timedelta, timezone
 
 import pytest
 
 from messikinesisprovider_spark.cursor import MessiCursor
+from messikinesisprovider_spark.sources import kinesis, kinesis_source
 from messikinesisprovider_spark.sources.kinesis import (
     KinesisTransport,
+    KinesisUnavailable,
     cursor_to_iterator_args,
     wait_stream_active,
 )
@@ -85,3 +90,25 @@ def test_wait_stream_active_polls_until_ready():
     client = FakeKinesisClient()
     wait_stream_active(client, "s", poll_s=0, timeout_s=5)
     assert client.describe_calls == 2
+
+
+def test_import_defers_boto3():
+    """boto3 is imported only when a real AWS client is built; importing the
+    binding (as every Kinesis streaming query's planner process does) must
+    not pay for it."""
+    code = (
+        "import sys\n"
+        "import messikinesisprovider_spark.sources.kinesis_source\n"
+        "import messikinesisprovider_spark.sources.kinesis\n"
+        "assert 'boto3' not in sys.modules\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=repo)
+
+
+def test_missing_boto3_raises_unavailable(monkeypatch):
+    monkeypatch.setattr(kinesis, "HAVE_BOTO3", False)
+    with pytest.raises(KinesisUnavailable):
+        KinesisTransport("s")
+    with pytest.raises(KinesisUnavailable):
+        kinesis_source._make_client({"streamname": "s"})

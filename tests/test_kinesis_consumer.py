@@ -11,12 +11,13 @@ from datetime import datetime, timedelta, timezone
 import pytest
 
 from messikinesisprovider_spark import wire
-from messikinesisprovider_spark.cursor import MessiCursor
+from messikinesisprovider_spark.cursor import CursorType, MessiCursor
 from messikinesisprovider_spark.sources import kinesis_sim, kinesis_source
 from messikinesisprovider_spark.sources.kinesis import (
     KinesisShardConsumer,
     KinesisTransport,
     create_stream,
+    decode_record,
     ensure_stream,
     list_shard_ids,
     list_stream_names,
@@ -119,6 +120,19 @@ def test_transport_roundtrip_through_simulator(tmp_path):
     assert [m["external_id"] for m in got] == [str(i) for i in range(5)]
 
 
+def test_put_counts_only_routed_shards(tmp_path, monkeypatch):
+    """put_records reads the record count of the shards it routes to only."""
+    client = kinesis_sim.FakeKinesisClient(str(tmp_path / "b"))
+    client.create_stream(StreamName="s", ShardCount=8)
+    calls = []
+    real = client._shard_count
+    monkeypatch.setattr(client, "_shard_count", lambda *a: calls.append(a) or real(*a))
+    for seq in range(2):
+        resp = client.put_records(StreamName="s", Records=[{"PartitionKey": "k", "Data": b"x"}])
+        assert resp["Records"][0]["SequenceNumber"] == kinesis_sim.format_sequence(seq)
+    assert len(calls) == 2  # one per call: the routed shard, not all 8
+
+
 # -- cursor positioning through GetShardIterator (P1-P6 over the wire) ------
 
 
@@ -201,6 +215,96 @@ def test_seek_repositions(tmp_path):
     assert c.receive(1.0)["external_id"] == "ext0"
     c.seek(T0_MS + 8000)
     assert c.receive(1.0)["external_id"] == "ext8"
+
+
+# -- decode on delivery -----------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def stream_1000(tmp_path_factory):
+    """1000-record shard (record i: arrival and ULID time T0 + i s) and its
+    eager reference: decode_record over a TRIM_HORIZON read."""
+    client = make_stream(tmp_path_factory.mktemp("s1000"), n=1000)
+    it = client.get_shard_iterator(
+        StreamName="s", ShardId="0", ShardIteratorType="TRIM_HORIZON"
+    )["ShardIterator"]
+    recs = client.get_records(ShardIterator=it, Limit=10_000)["Records"]
+    return client, [decode_record(r, "0") for r in recs]
+
+
+def test_sequence_seek_decodes_one_record(stream_1000, monkeypatch):
+    client, eager = stream_1000
+    calls = []
+    real = wire.decode_message
+    monkeypatch.setattr(wire, "decode_message", lambda b: calls.append(1) or real(b))
+    c, _ = consumer(client, MessiCursor.at_sequence("0", 300))
+    assert c.receive(1.0) == eager[300]
+    assert len(calls) == 1
+    assert c.total_fetched == 700  # the whole page is fetched, not decoded
+
+
+_TOL = timedelta(seconds=2)
+_AT_500 = Ulid.of(T0_MS + 500_000, 500)  # record 500's exact ulid
+_GHOST = Ulid.of(T0_MS + 500_500, 999)  # between records 500 and 501, absent
+_NEAR_500 = T0 + timedelta(seconds=500)
+_NEAR_GHOST = T0 + timedelta(milliseconds=500_500)
+
+# cursor, eager index of the first delivery, and the (requests, total_fetched)
+# of the consumer that decoded every fetched record, at fetch limits 1000 / 50
+_POSITIONED = {
+    "ulid_inclusive": (MessiCursor.at_ulid(_AT_500), 500, (1, 560), (2, 100)),
+    "ulid_exclusive": (MessiCursor.at_ulid(_AT_500, inclusive=False), 501, (1, 560), (2, 100)),
+    "external_id_inclusive": (
+        MessiCursor.at_external_id("ext500", _NEAR_500), 500, (1, 560), (2, 100),
+    ),
+    "external_id_exclusive": (
+        MessiCursor.at_external_id("ext500", _NEAR_500, inclusive=False), 501, (1, 560), (2, 100),
+    ),
+    # missing target: fallback replay from the lookahead, then live polling
+    "ulid_fallback": (
+        MessiCursor(CursorType.AT_ULID, ulid=_GHOST, tolerance=_TOL), 501, (1, 501), (1, 50),
+    ),
+    "external_id_fallback": (
+        MessiCursor.at_external_id("ghost", _NEAR_GHOST, tolerance=_TOL),
+        499, (1, 501), (1, 50),
+    ),
+}
+
+
+@pytest.mark.parametrize("fetch_limit", [1000, 50])
+@pytest.mark.parametrize("case", sorted(_POSITIONED))
+def test_positioned_delivery_matches_eager_decode(stream_1000, case, fetch_limit):
+    client, eager = stream_1000
+    cursor, first, counts_1000, counts_50 = _POSITIONED[case]
+    c, _ = consumer(client, cursor, fetch_limit=fetch_limit)
+    got = [c.receive(1.0) for _ in range(20)]
+    assert got == eager[first : first + 20]
+    expected = counts_1000 if fetch_limit == 1000 else counts_50
+    assert (c.requests, c.total_fetched) == expected
+
+
+def test_bad_payload_stays_at_head(tmp_path):
+    """A record that fails to decode is not skipped: every delivery raises
+    on it again, and the records behind it stay buffered."""
+    client = kinesis_sim.FakeKinesisClient(str(tmp_path / "b"))
+    client.create_stream(StreamName="s")
+    datas = [
+        wire.encode_message({"external_id": "good0"}),
+        b"\x07",  # field 0, wire type 7: no protobuf decoder accepts it
+        wire.encode_message({"external_id": "good1"}),
+    ]
+    client.put_records(StreamName="s", Records=[{"PartitionKey": "k", "Data": d} for d in datas])
+    c, _ = consumer(client)
+    assert c.receive(1.0)["external_id"] == "good0"
+    for _ in range(2):
+        with pytest.raises(ValueError, match="wire type"):
+            c.poll(1.0)
+        assert len(c.buffer) == 2
+    assert c.requests == 1
+    # the positioning scan peeks at the same bytes and stops there too
+    c2, _ = consumer(client, MessiCursor.at_external_id("good1", T0 + timedelta(hours=1)))
+    with pytest.raises(ValueError, match="wire type"):
+        c2.receive(1.0)
 
 
 # -- flow control: F1 / F3 / F4 / F5 ----------------------------------------

@@ -3,6 +3,8 @@ sink or a snapshot): checkpoints, staging logs, broker state and reader
 metadata are drain scratch, removed when the drain returns."""
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -37,3 +39,27 @@ def test_topology_leaves_only_its_result_dir(
     assert out.count() > 0  # the surviving dir still serves the result
     left = set(os.listdir(tmp_path)) - _session_cache_dirs()
     assert len(left) == n_left, sorted(left)
+
+
+def test_session_staging_dirs_removed_at_exit(sf_dir, tmp_path):
+    """The per-session staging caches outlive every drain but not the
+    interpreter: a process that staged the events log leaves no
+    `messilog_events_*` dir behind once it exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from messikinesisprovider_spark.registry import all_specs\n"
+        "from messikinesisprovider_spark.session import get_spark\n"
+        "from messikinesisprovider_spark.streaming import verified\n"
+        "spark = get_spark('staging-exit', cpus=2)\n"
+        f"assert all_specs()['streaming_time_bucket'].fn(spark, {sf_dir!r}).count() > 0\n"
+        "print(*verified._STAGED.values())\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        timeout=600, check=True,
+    )
+    staged = out.stdout.split()[-1]
+    assert staged.startswith(str(tmp_path) + os.sep)  # staged under TMPDIR
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("messilog_events_")]
