@@ -1,4 +1,4 @@
-"""Real AWS Kinesis binding (gated — no AWS SDK in this environment).
+"""Kinesis binding: cursor mapping, the GetRecords consumer, stream admin.
 
 Maps the engine's cursor/publish contract onto actual Kinesis primitives, the
 way the reference does natively:
@@ -9,13 +9,20 @@ way the reference does natively:
   AT_EXTERNAL_ID seek AT_TIMESTAMP at (t − tolerance) and apply the residual
   client-side, exactly like the reference (KinesisMessiStreamingConsumer.java
   :81-148).
+- reads → `KinesisShardConsumer`, the one GetRecords polling loop every read
+  path in the package runs on (both stream readers and the replay).
 - publish → PutRecords batches with the failed-subset retry loop
   (streaming/sink.publish_with_retry is transport-agnostic; this module
   provides the boto3 transport).
 - stream admin → create/describe/wait-active (KinesisUtils.java:24-96).
 
-Everything is import-gated: constructing any class without boto3 installed
-raises a clear error, and the rest of the engine never imports this module.
+Everything here takes a boto3-shaped client: a real ``boto3.client
+("kinesis")`` in deployment, the file-backed `kinesis_sim` broker in tests
+and benchmarks. boto3 itself is imported only where a real client is built
+(`KinesisTransport` without a client, `kinesis_source._make_client` without
+a clientfactory); without boto3 installed those raise `KinesisUnavailable`.
+Both stream readers (kinesis_source.py, kinesis_partitioned.py) and the
+writer (kinesis_writer.py) import this module.
 """
 
 from __future__ import annotations
@@ -215,6 +222,10 @@ def decode_record(rec: dict, shard_id: str) -> dict:
 # The polling GetRecords consumer (twin of KinesisStreamingBuffer.java:37-335)
 # ---------------------------------------------------------------------------
 
+# to_tip() raises the last error after this many failed GetRecords calls in a
+# row: a bounded read (an executor task, a replay) must fail, not hang
+MAX_FAILED_CALLS = 5
+
 class KinesisShardConsumer:
     """Bounded-buffer polling consumer for one shard.
 
@@ -238,6 +249,16 @@ class KinesisShardConsumer:
       the last buffered record, so recovery never loses or repeats messages.
     - F6 error isolation: any other error retries after one poll interval
       (reference :136-140).
+
+    `fill_once` is the one GetRecords call site in the package, and this
+    ladder the one error ladder. `to_tip()` pumps it for a bounded read —
+    drain the buffer, wait out the pacing, fetch, repeat — until the first
+    empty page at the tip or the end of a closed shard, and raises once
+    MAX_FAILED_CALLS is exceeded. Three read paths build their consumer with
+    `kinesis_source.shard_consumer`: the simple reader's microbatches (one
+    fill_once + drain each, consumer kept across batches), its
+    `readBetweenOffsets` replay and the partitioned reader's executor-side
+    slices (both `to_tip()`).
 
     The buffer holds RAW GetRecords records: F1 counts raw records, and a
     record is decoded (wire.decode_message + provenance stamping) only when
@@ -292,6 +313,10 @@ class KinesisShardConsumer:
         self.requests = 0
         self.responses_handled = 0
         self.total_fetched = 0
+        # set by each GetRecords response: an empty page at MillisBehindLatest 0
+        self.at_tip = False
+        self.failed_calls = 0  # in a row; a successful call resets it
+        self.last_error: Exception | None = None
         self._last_seq: str | None = None  # last sequence added to buffer
         self._next_fetch_at = 0.0
         self._next_iterator = self._resolve_iterator()
@@ -333,12 +358,15 @@ class KinesisShardConsumer:
         if now < self._next_fetch_at:
             return False
         self.requests += 1
+        self.at_tip = False
         try:
             resp = self.client.get_records(
                 ShardIterator=self._next_iterator, Limit=self.policy.fetch_limit
             )
         except Exception as e:  # noqa: BLE001 - classified below
             self.responses_handled += 1
+            self.failed_calls += 1
+            self.last_error = e
             code = error_code(e)
             if code == "ExpiredIteratorException":
                 # F5: re-resolve and retry after one poll interval
@@ -352,7 +380,10 @@ class KinesisShardConsumer:
                 self._next_fetch_at = now + self.policy.error_retry_ms / 1000
             return True
         self.responses_handled += 1
+        self.failed_calls = 0
         records = resp.get("Records", [])
+        behind_ms = resp.get("MillisBehindLatest", 0) or 0
+        self.at_tip = not records and not behind_ms
         nxt = resp.get("NextShardIterator")
         if nxt:
             self._next_iterator = nxt
@@ -365,7 +396,6 @@ class KinesisShardConsumer:
                 self.total_fetched += len(records)
             return True
         if not records:
-            behind_ms = resp.get("MillisBehindLatest", 0) or 0
             if behind_ms < self.policy.poll_interval_ms:
                 # at the tip: wait out the rest of the poll interval (F3)
                 self._next_fetch_at = now + (self.policy.poll_interval_ms - behind_ms) / 1000
@@ -377,6 +407,26 @@ class KinesisShardConsumer:
         self.total_fetched += len(records)
         self._next_fetch_at = now
         return True
+
+    def to_tip(self):
+        """Decoded messages from the current position until the first empty
+        page at the tip (at_tip) or the end of a closed shard (shard_ended):
+        the bounded read of a replay or an executor-side slice. Pacing and
+        backoff are fill_once's; after more than MAX_FAILED_CALLS failed
+        calls in a row the last error is raised."""
+        if self.closed:
+            raise RuntimeError("KinesisShardConsumer is closed")
+        while True:
+            yield from self.drain()
+            if self.shard_ended:
+                return
+            if self.failed_calls > MAX_FAILED_CALLS:
+                raise self.last_error
+            wait = self._next_fetch_at - self.clock()
+            if wait > 0:
+                self.sleep(wait)
+            if self.fill_once() and self.at_tip:
+                return
 
     # -- delivery -----------------------------------------------------------
     def _head(self, deadline: float) -> dict | None:

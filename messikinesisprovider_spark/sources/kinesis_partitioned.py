@@ -8,8 +8,10 @@ the fetching spread across executors. This reader is the scale-correct
 shape: the driver plans OFFSETS only; each microbatch fans out one
 `InputPartition` per shard, and the GetRecords paging, rate-limit backoff
 (F4) and expired-iterator recovery (F5) all run inside executor Python
-workers. Rows stream out of `read` as an iterator — never materialized
-whole — so per-task memory is bounded by one GetRecords page (F1).
+workers — through the same `KinesisShardConsumer.to_tip()` loop and error
+ladder as the simple reader's replay. Rows stream out of `read` as an
+iterator — never materialized whole — so per-task memory is bounded by one
+GetRecords page (F1).
 
 Offset design — sequence offsets with an executor-written sidecar
 -----------------------------------------------------------------
@@ -38,22 +40,21 @@ and the metadatadir is offset state — pair it 1:1 with one query's
 checkpointLocation, never reused or shared.
 
 Reader selection: ``format("kinesismessi")`` uses this reader when
-`metadatadir` is set (or `option("reader", "partitioned")` is explicit);
-otherwise it falls back to the driver-side simple reader, whose per-shard
-consumers carry poll pacing across microbatches. Checkpoints are NOT
-interchangeable between the two readers.
+`metadatadir` is set; otherwise it falls back to the driver-side simple
+reader, whose per-shard consumers carry poll pacing across microbatches.
+Checkpoints are NOT interchangeable between the two readers.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
+import shutil
 from typing import Iterator
 
 from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
-from .kinesis_source import _make_client, _starting_cursor, _to_row
+from .kinesis_source import _make_client, _to_row, shard_consumer
 
 
 class KinesisShardSlice(InputPartition):
@@ -67,26 +68,13 @@ class KinesisShardSlice(InputPartition):
         self.options = options
 
 
-def _sidecar_write(metadatadir: str, gen: int, shard_id: str, last_seq: str) -> None:
-    gen_dir = os.path.join(metadatadir, f"gen={gen}")
-    os.makedirs(gen_dir, exist_ok=True)
-    final = os.path.join(gen_dir, f"shard-{shard_id}.json")
-    tmp = final + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump({"shard_id": shard_id, "last_seq": last_seq}, f)
-    os.replace(tmp, final)  # atomic publish
-
-
-def _closed_write(metadatadir: str, shard_id: str, last_seq: str) -> None:
-    """Durable end-of-shard marker (resharding): written when a task read a
-    closed shard to its null NextShardIterator. Lives OUTSIDE the gen=N
-    directories so commit()'s generation GC never erases it — a GC'd closure
-    would resurrect the drained parent in latestOffset with an empty start
-    and replay it from the initial position."""
-    closed_dir = os.path.join(metadatadir, "closed")
-    os.makedirs(closed_dir, exist_ok=True)
-    final = os.path.join(closed_dir, f"shard-{shard_id}.json")
-    if os.path.exists(final):
+def _publish(directory: str, shard_id: str, last_seq: str, keep_first: bool = False) -> None:
+    """Atomically publish `directory`/shard-<id>.json (temp file +
+    os.replace). `keep_first` leaves an existing file alone: the first
+    closure a shard records wins."""
+    os.makedirs(directory, exist_ok=True)
+    final = os.path.join(directory, f"shard-{shard_id}.json")
+    if keep_first and os.path.exists(final):
         return
     tmp = final + f".tmp-{os.getpid()}"
     with open(tmp, "w") as f:
@@ -94,23 +82,46 @@ def _closed_write(metadatadir: str, shard_id: str, last_seq: str) -> None:
     os.replace(tmp, final)
 
 
-def _closed_scan(metadatadir: str) -> dict[str, str]:
-    """shard_id -> final sequence for every shard read to closure."""
-    closed_dir = os.path.join(metadatadir, "closed")
-    out: dict[str, str] = {}
-    if not os.path.isdir(closed_dir):
-        return out
-    for fname in os.listdir(closed_dir):
+def _scan(directory: str) -> Iterator[tuple[str, str]]:
+    """(shard_id, last_seq) of every shard file `_publish` left in
+    `directory`; a missing directory or a crashed task's torn write is
+    skipped."""
+    try:
+        names = os.listdir(directory)
+    except FileNotFoundError:
+        return
+    for fname in names:
         if not fname.endswith(".json"):
             continue
         try:
-            with open(os.path.join(closed_dir, fname)) as f:
+            with open(os.path.join(directory, fname)) as f:
                 rec = json.load(f)
         except (OSError, ValueError):
             continue
         if rec.get("shard_id"):
-            out[rec["shard_id"]] = rec.get("last_seq", "")
-    return out
+            yield rec["shard_id"], rec.get("last_seq", "")
+
+
+def _generations(metadatadir: str) -> dict[int, str]:
+    """generation number -> its gen=N directory."""
+    try:
+        names = os.listdir(metadatadir)
+    except FileNotFoundError:
+        return {}
+    gens = {}
+    for name in names:
+        if name.startswith("gen=") and name[4:].isdecimal():
+            gens[int(name[4:])] = os.path.join(metadatadir, name)
+    return gens
+
+
+def _closed(metadatadir: str) -> dict[str, str]:
+    """shard_id -> final sequence of every shard read to closure. The
+    closed/ directory lives OUTSIDE the gen=N directories so commit()'s
+    generation GC never erases it — a GC'd closure would resurrect the
+    drained parent in latestOffset with an empty start and replay it from
+    the initial position."""
+    return dict(_scan(os.path.join(metadatadir, "closed")))
 
 
 def _sidecar_scan(metadatadir: str) -> tuple[int, dict[str, str]]:
@@ -119,116 +130,45 @@ def _sidecar_scan(metadatadir: str) -> tuple[int, dict[str, str]]:
     Max-merging is safe because sequences only grow; scanning every
     generation (rather than the newest) tolerates a crashed batch whose
     generation directory is missing some shards."""
-    max_gen = 0
+    gens = _generations(metadatadir)
     seqs: dict[str, str] = {}
-    if not os.path.isdir(metadatadir):
-        return 0, {}
-    for gen_name in os.listdir(metadatadir):
-        if not gen_name.startswith("gen="):
-            continue
-        try:
-            gen = int(gen_name[4:])
-        except ValueError:
-            continue
-        max_gen = max(max_gen, gen)
-        gen_dir = os.path.join(metadatadir, gen_name)
-        for fname in os.listdir(gen_dir):
-            if not fname.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(gen_dir, fname)) as f:
-                    rec = json.load(f)
-            except (OSError, ValueError):
-                continue  # torn write of a crashed task: ignore
-            sid, seq = rec.get("shard_id"), rec.get("last_seq", "")
-            if not sid or not seq:
-                continue
-            if not seqs.get(sid) or int(seq) > int(seqs[sid]):
+    for gen_dir in gens.values():
+        for sid, seq in _scan(gen_dir):
+            if seq and (not seqs.get(sid) or int(seq) > int(seqs[sid])):
                 seqs[sid] = seq
-    return max_gen, seqs
+    return max(gens, default=0), seqs
 
 
 def _read_shard_slice(part: KinesisShardSlice) -> Iterator[tuple]:
-    """Executor-side GetRecords loop: AFTER start_seq to the shard tip.
-
-    Same recovery contract as KinesisShardConsumer, in-loop: rate limits
-    retry on the reference's 3x-poll-interval ladder (F4,
-    KinesisStreamingBuffer.java:133), expired iterators re-resolve from the
-    last delivered sequence (F5) — no loss, no duplicates."""
-    from .kinesis import cursor_to_iterator_args, decode_record, error_code
-
-    client = _make_client(part.options)
-    stream_name = part.options["streamname"]
-    topic = part.options.get("topic", stream_name)
-    fetch_limit = int(part.options.get("maxrecordspershard", 1000))
-    poll_s = int(part.options.get("pollintervalms", 1000)) / 1000.0
-    metadatadir = part.options["metadatadir"]
-
-    def iterator_from(last_seq: str):
-        if last_seq:
-            args = {
-                "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
-                "StartingSequenceNumber": last_seq,
-            }
-        else:
-            args = cursor_to_iterator_args(_starting_cursor(part.options))
-        return client.get_shard_iterator(
-            StreamName=stream_name, ShardId=part.shard_id, **args
-        )["ShardIterator"]
-
+    """Executor-side read AFTER start_seq to the shard tip: the consumer's
+    to_tip() loop, with its F4 rate-limit backoff, F5 iterator recovery and
+    F6 retry — no loss, no duplicates. The sidecar gets the last sequence
+    actually yielded, also when Spark stops the iterator early."""
+    options = part.options
+    c = shard_consumer(_make_client(options), options, part.shard_id, part.start_seq)
+    topic = options.get("topic", options["streamname"])
     last_seq = part.start_seq
-    it = iterator_from(last_seq)
-    rate_limit_tries = 0
-    shard_ended = False
     try:
-        while True:
-            try:
-                resp = client.get_records(ShardIterator=it, Limit=fetch_limit)
-            except Exception as e:  # noqa: BLE001
-                code = error_code(e)
-                if code == "ProvisionedThroughputExceededException":
-                    rate_limit_tries += 1
-                    if rate_limit_tries > 5:
-                        raise
-                    time.sleep(poll_s * 3)  # reference backoff ladder (F4)
-                    continue
-                if code == "ExpiredIteratorException":
-                    it = iterator_from(last_seq)  # F5
-                    continue
-                raise
-            rate_limit_tries = 0
-            records = resp.get("Records", [])
-            for rec in records:
-                msg = decode_record(rec, part.shard_id)
-                last_seq = rec["SequenceNumber"]
-                yield _to_row(msg, topic)
-            it = resp.get("NextShardIterator")
-            if it is None:
-                # null NextShardIterator: the shard was closed by a split/
-                # merge and is now fully drained — record the durable closure
-                # so latestOffset retires it and unlocks its children.
-                shard_ended = True
-                return
-            if not records and not resp.get("MillisBehindLatest", 0):
-                return  # the tip: batch ends here
+        for msg in c.to_tip():
+            last_seq = msg["provider"]["sequence_number"]
+            yield _to_row(msg, topic)
     finally:
         # report the end of this slice — also when nothing was read, so the
         # sidecar stays a complete per-shard map for latestOffset
-        _sidecar_write(metadatadir, part.gen, part.shard_id, last_seq)
-        if shard_ended:
-            _closed_write(metadatadir, part.shard_id, last_seq)
+        metadatadir = options["metadatadir"]
+        _publish(os.path.join(metadatadir, f"gen={part.gen}"), part.shard_id, last_seq)
+        if c.shard_ended and not c.buffer:
+            # every record of the closed shard was yielded: record the
+            # durable closure so latestOffset retires it and unlocks its
+            # children (the consumer learns of the closure on fetching the
+            # final page, before that page's records are yielded)
+            _publish(os.path.join(metadatadir, "closed"), part.shard_id, last_seq, keep_first=True)
 
 
 class KinesisPartitionedStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.options = dict(options)
         self.stream_name = self.options["streamname"]
-        if "metadatadir" not in self.options:
-            raise ValueError(
-                "the partitioned kinesismessi reader needs option('metadatadir', "
-                "...) — a directory shared by driver and executors where tasks "
-                "report consumed sequences; or use option('reader', 'simple')"
-            )
         # The sidecar is offset state: it must pair 1:1 with ONE query's
         # checkpointLocation. Reusing a metadatadir with a fresh checkpoint
         # (or sharing it between two queries) folds another run's consumed
@@ -275,7 +215,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {
             "gen": 0,
-            "shards": {sid: "" for sid in self._eligible_shards(_closed_scan(self.metadatadir))},
+            "shards": {sid: "" for sid in self._eligible_shards(_closed(self.metadatadir))},
         }
 
     def latestOffset(self) -> dict:
@@ -284,10 +224,10 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # eligible shard (re-enumerated, so resharding is picked up; new and
         # newly-unlocked child shards enter at "" = the initial position).
         max_gen, seqs = _sidecar_scan(self.metadatadir)
-        closed = _closed_scan(self.metadatadir)
+        eligible = self._eligible_shards(_closed(self.metadatadir))
         return {
             "gen": max_gen + 1,
-            "shards": {sid: seqs.get(sid, "") for sid in self._eligible_shards(closed)},
+            "shards": {sid: seqs.get(sid, "") for sid in eligible},
         }
 
     def partitions(self, start: dict, end: dict):
@@ -309,16 +249,6 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # GC sidecar generations older than the committed one minus one
         # (the max-merge scan needs no history once a newer gen is complete)
         keep_from = int(end.get("gen", 0)) - 1
-        if not os.path.isdir(self.metadatadir):
-            return
-        for gen_name in os.listdir(self.metadatadir):
-            if not gen_name.startswith("gen="):
-                continue
-            try:
-                gen = int(gen_name[4:])
-            except ValueError:
-                continue
+        for gen, gen_dir in _generations(self.metadatadir).items():
             if gen < keep_from:
-                import shutil
-
-                shutil.rmtree(os.path.join(self.metadatadir, gen_name), ignore_errors=True)
+                shutil.rmtree(gen_dir, ignore_errors=True)

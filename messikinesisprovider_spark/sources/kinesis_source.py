@@ -22,21 +22,26 @@ maxrecordspershard   GetRecords page size / per-shard admission (F1),
 pollintervalms       poll pacing base, default 1000
                      (KinesisMessiClientFactory.java:64)
 topic                logical topic stamped on rows (default = streamname)
+metadatadir          directory shared by driver and executors; setting it
+                     selects the executor-parallel reader (below), whose
+                     tasks report consumed sequences there
 
 Offsets are ``{shard_id: last_sequence_number}`` ("" = shard not yet read) —
 the same checkpoint shape as the reference (KinesisMessiCursor.java:59-68).
 Restart resumes AFTER_SEQUENCE_NUMBER per shard; `readBetweenOffsets` replays
-a write-ahead-logged batch deterministically for failure recovery.
+a write-ahead-logged batch deterministically for failure recovery. Every read
+path builds its consumer with `shard_consumer`, so the microbatch, the replay
+and the partitioned reader's slices share one GetRecords loop and one
+F4/F5/F6 error ladder.
 
 Two readers live behind this format. The default here is a
 `SimpleDataSourceStreamReader`: fetching happens in the driver-side planning
 process — adequate for tens of shards (Kinesis caps reads at 1000 records /
 5 req/s per shard, so per-shard throughput is API-bound), and its per-shard
 consumers keep poll pacing and backoff state across microbatches. For wide
-streams, `option("metadatadir", ...)` (or `option("reader", "partitioned")`)
-selects the EXECUTOR-PARALLEL reader in kinesis_partitioned.py: one
-InputPartition per shard, GetRecords in executor workers, sidecar-reported
-sequence offsets. Checkpoints are not portable between the two.
+streams, `option("metadatadir", ...)` selects the EXECUTOR-PARALLEL reader
+in kinesis_partitioned.py: one InputPartition per shard, GetRecords in
+executor workers, sidecar-reported sequence offsets. Checkpoints are not portable between the two.
 
 Sequence numbers stay opaque strings end-to-end (real Kinesis sequence
 numbers exceed int64), so this source's schema is the message envelope plus
@@ -96,6 +101,27 @@ def _starting_cursor(options: dict) -> MessiCursor:
     return MessiCursor.oldest()
 
 
+def shard_consumer(client, options: dict, shard_id: str, after_seq: str):
+    """The KinesisShardConsumer of every read path: it resumes strictly
+    after `after_seq` (P4 exclusive) or, for "", at the configured
+    startingposition, and paces itself by pollintervalms /
+    maxrecordspershard."""
+    from ..streaming.policy import PollPolicy
+    from .kinesis import KinesisShardConsumer
+
+    if after_seq:
+        cursor = MessiCursor.at_sequence(shard_id, int(after_seq), inclusive=False)
+    else:
+        cursor = _starting_cursor(options)
+    policy = PollPolicy(
+        poll_interval_ms=int(options.get("pollintervalms", 1000)),
+        fetch_limit=int(options.get("maxrecordspershard", 1000)),
+    )
+    return KinesisShardConsumer(
+        client, options["streamname"], shard_id, cursor=cursor, policy=policy
+    )
+
+
 def _naive(ms: int | None):
     if ms is None:
         return None
@@ -143,23 +169,12 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
         self.topic = options.get("topic", self.stream_name)
         self._client = None
         self._consumers: dict[str, object] = {}
-        self._policy = None
 
     # lazily constructed so the reader pickles cleanly into the planning proc
     def client(self):
         if self._client is None:
             self._client = _make_client(self.options)
         return self._client
-
-    def policy(self):
-        if self._policy is None:
-            from ..streaming.policy import PollPolicy
-
-            self._policy = PollPolicy(
-                poll_interval_ms=int(self.options.get("pollintervalms", 1000)),
-                fetch_limit=int(self.options.get("maxrecordspershard", 1000)),
-            )
-        return self._policy
 
     def _shard_ids(self) -> list[str]:
         # Paginated: DescribeStream pages shards 10 at a time
@@ -177,19 +192,10 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
         NextShardIterator chaining, poll pacing and backoff state all carry
         over. A consumer is (re)built when Spark's start offset diverges from
         the consumer's own position (checkpoint restart)."""
-        from .kinesis import KinesisShardConsumer
-
         c = self._consumers.get(shard_id)
         if c is not None and c._spark_offset == last_seq:
             return c
-        if last_seq:
-            # resume strictly after the last committed record (P4 exclusive)
-            cursor = MessiCursor.at_sequence(shard_id, int(last_seq), inclusive=False)
-        else:
-            cursor = _starting_cursor(self.options)
-        c = KinesisShardConsumer(
-            self.client(), self.stream_name, shard_id, cursor=cursor, policy=self.policy()
-        )
+        c = shard_consumer(self.client(), self.options, shard_id, last_seq)
         c._spark_offset = last_seq
         self._consumers[shard_id] = c
         return c
@@ -244,56 +250,21 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        """Deterministic replay for failure recovery: page AFTER start until
-        the end sequence, per shard. Expired iterators re-resolve from the
-        last position (F5) — replay never loses records."""
-        from .kinesis import cursor_to_iterator_args, error_code
-
-        client = self.client()
+        """Deterministic replay for failure recovery: each shard's consumer
+        reads AFTER its start sequence through its end sequence, on the same
+        F4/F5/F6 ladder as a microbatch — replay never loses records."""
         out: list[tuple] = []
         for sid, end_seq in end.items():
             start_seq = start.get(sid, "")
             if not end_seq or end_seq == start_seq:
                 continue
-            if start_seq:
-                args = {
-                    "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
-                    "StartingSequenceNumber": start_seq,
-                }
-            else:
-                args = cursor_to_iterator_args(_starting_cursor(self.options))
-            it = client.get_shard_iterator(
-                StreamName=self.stream_name, ShardId=sid, **args
-            )["ShardIterator"]
-            last = start_seq
-            while int(last or -1) < int(end_seq):
-                try:
-                    resp = client.get_records(
-                        ShardIterator=it, Limit=self.policy().fetch_limit
-                    )
-                except Exception as e:  # noqa: BLE001
-                    if error_code(e) == "ExpiredIteratorException":
-                        it = client.get_shard_iterator(
-                            StreamName=self.stream_name,
-                            ShardId=sid,
-                            ShardIteratorType=(
-                                "AFTER_SEQUENCE_NUMBER" if last else "TRIM_HORIZON"
-                            ),
-                            **({"StartingSequenceNumber": last} if last else {}),
-                        )["ShardIterator"]
-                        continue
-                    raise
-                records = resp.get("Records", [])
-                if not records:
-                    break  # end of retained data: emit what exists
-                for rec in records:
-                    if int(rec["SequenceNumber"]) > int(end_seq):
-                        break
-                    from .kinesis import decode_record
-
-                    out.append(_to_row(decode_record(rec, sid), self.topic))
-                    last = rec["SequenceNumber"]
-                it = resp.get("NextShardIterator", it)
+            for msg in shard_consumer(self.client(), self.options, sid, start_seq).to_tip():
+                seq = int(msg["provider"]["sequence_number"])
+                if seq > int(end_seq):
+                    break
+                out.append(_to_row(msg, self.topic))
+                if seq == int(end_seq):
+                    break
         return iter(out)
 
     def commit(self, end: dict) -> None:
@@ -310,16 +281,11 @@ class KinesisMessiDataSource(DataSource):
 
     def streamReader(self, schema):
         """Executor-parallel reader (one InputPartition per shard,
-        kinesis_partitioned.py) when `metadatadir` is configured or
-        `option("reader", "partitioned")` is explicit; otherwise raises
-        PySparkNotImplementedError so the engine falls back to the
+        kinesis_partitioned.py) when `metadatadir` is configured; otherwise
+        raises PySparkNotImplementedError so the engine falls back to the
         driver-side simple reader below. Checkpoints are not portable
         between the two readers."""
-        reader = self.options.get("reader", "").lower()
-        use_partitioned = reader == "partitioned" or (
-            reader != "simple" and "metadatadir" in self.options
-        )
-        if not use_partitioned:
+        if "metadatadir" not in self.options:
             from pyspark.errors import PySparkNotImplementedError
 
             raise PySparkNotImplementedError(

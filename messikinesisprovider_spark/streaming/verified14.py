@@ -126,7 +126,7 @@ def streaming_kinesis_reshard_pipeline(spark: SparkSession, sf_dir: str) -> Data
         publish_phase(spark, sf_dir, statedir, phase=1)
         # drain until stable: batch 1 reads shard 1 + drains parent 0 to its
         # closure marker; batch 2 unlocks children 2/3; batch 3 confirms empty
-        return kinesis_event_type_counts(spark, statedir, reader="partitioned")
+        return kinesis_event_type_counts(spark, statedir, partitioned=True)
 
 
 @register(
@@ -184,4 +184,4 @@ def streaming_kinesis_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
             .save()
         )
         # pass 1 drains to tip; pass 2 ingests nothing
-        return kinesis_event_type_counts(spark, statedir, reader="partitioned")
+        return kinesis_event_type_counts(spark, statedir, partitioned=True)

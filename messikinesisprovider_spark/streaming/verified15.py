@@ -70,4 +70,4 @@ def streaming_kinesis_merge_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
         # drain until stable: batch 1 reads shard 2 + drains parents 0 and 1
         # to their closure markers; batch 2 unlocks the merged child 3;
         # batch 3 confirms empty
-        return kinesis_event_type_counts(spark, statedir, reader="partitioned")
+        return kinesis_event_type_counts(spark, statedir, partitioned=True)

@@ -223,13 +223,14 @@ def _staged_kinesis(spark: SparkSession, sf_dir: str) -> str:
 
 
 def kinesis_event_type_counts(
-    spark: SparkSession, statedir: str, reader: str = "simple"
+    spark: SparkSession, statedir: str, partitioned: bool = False
 ) -> DataFrame:
     """Consume the broker stream "events" in `statedir` through
-    format("kinesismessi") with the given reader, drain it to the tip into a
-    parquet dir, and aggregate per event_type — the shared body of every
-    Kinesis consumer topology (they differ only in how the broker is filled
-    and which reader drains it).
+    format("kinesismessi") with the simple reader (or, when `partitioned`,
+    the executor-parallel reader over a scratch metadatadir), drain it to
+    the tip into a parquet dir, and aggregate per event_type — the shared
+    body of every Kinesis consumer topology (they differ only in how the
+    broker is filled and which reader drains it).
 
     Drain-to-tip loop: the simple reader prefetches one F1-bounded fill per
     shard at planning and availableNow stops at that captured offset, so a
@@ -246,7 +247,7 @@ def kinesis_event_type_counts(
     register_source(spark)
     out_dir = tempfile.mkdtemp(prefix="kinesis_out_")
     with tempfile.TemporaryDirectory(prefix="kinesis_drain_") as scratch:
-        slim = (
+        source = (
             spark.readStream.format("kinesismessi")
             .option("streamname", "events")
             .option(
@@ -255,9 +256,11 @@ def kinesis_event_type_counts(
             )
             .option("statedir", statedir)
             .option("pollintervalms", "10")
-            .option("reader", reader)
-            .option("metadatadir", os.path.join(scratch, "meta"))
-            .load()
+        )
+        if partitioned:
+            source = source.option("metadatadir", os.path.join(scratch, "meta"))
+        slim = (
+            source.load()
             .select(
                 F.col("attributes")["event_type"].alias("event_type"),
                 F.col("partition_key").alias("user_key"),

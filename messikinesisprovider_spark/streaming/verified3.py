@@ -43,7 +43,7 @@ def streaming_kinesis_pipeline_partitioned(spark: SparkSession, sf_dir: str) -> 
     drain loop.
     """
     return kinesis_event_type_counts(
-        spark, _staged_kinesis(spark, sf_dir), reader="partitioned"
+        spark, _staged_kinesis(spark, sf_dir), partitioned=True
     )
 
 

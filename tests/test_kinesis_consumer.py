@@ -363,6 +363,144 @@ def test_f5_expiry_before_first_fetch_uses_cursor(tmp_path):
     assert c.receive(10.0)["external_id"] == "ext1"  # cursor re-resolved
 
 
+# -- the to_tip() pump: bounded reads (replay, partitioned slices) ----------
+
+_MID = str(1 << 127)  # midpoint of the 128-bit hash space
+
+
+def _source_options(tmp_path, **extra):
+    """Reader options over the make_stream broker of `tmp_path`."""
+    return {
+        "streamname": "s",
+        "clientfactory": "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
+        "statedir": str(tmp_path / "broker"),
+        "pollintervalms": "10",
+        **extra,
+    }
+
+
+def test_to_tip_stops_at_first_empty_page_at_tip(tmp_path):
+    client = make_stream(tmp_path, n=10)
+    c, clock = consumer(client, fetch_limit=4)
+    t0 = clock()
+    got = [m["external_id"] for m in c.to_tip()]
+    assert got == [f"ext{i}" for i in range(10)]
+    assert c.requests == 4  # pages of 4, 4, 2, then one empty page at the tip
+    assert c.at_tip and not c.shard_ended
+    assert clock() == t0  # behind the tip every refetch is immediate
+
+
+def test_to_tip_stops_at_closed_shard_end(tmp_path):
+    client = make_stream(tmp_path, n=10)
+    client.split_shard(StreamName="s", ShardToSplit="0", NewStartingHashKey=_MID)
+    c, _ = consumer(client, fetch_limit=4)
+    got = [m["external_id"] for m in c.to_tip()]
+    assert got == [f"ext{i}" for i in range(10)]
+    assert c.requests == 3  # the page of 2 carries the null NextShardIterator
+    assert c.shard_ended and not c.buffer
+
+
+def test_to_tip_recovers_from_one_rate_limit(tmp_path):
+    client = make_stream(tmp_path, n=5)
+    c, clock = consumer(client)
+    client.trigger_rate_limit_on_next_get_records()
+    t0 = clock()
+    assert [m["external_id"] for m in c.to_tip()] == [f"ext{i}" for i in range(5)]
+    assert clock() - t0 == 3.0  # one F4 backoff of 3x the poll interval
+
+
+class _AlwaysFailing:
+    """Broker whose every GetRecords call raises `error`."""
+
+    def __init__(self, client, error):
+        self.client, self.error, self.calls = client, error, 0
+
+    def get_shard_iterator(self, **kw):
+        return self.client.get_shard_iterator(**kw)
+
+    def get_records(self, **kw):
+        self.calls += 1
+        raise self.error
+
+
+@pytest.mark.parametrize(
+    "error, wait_s",
+    [
+        (kinesis_sim.ProvisionedThroughputExceeded("throttled"), 3.0),  # F4
+        (RuntimeError("broker down"), 1.0),  # F6
+    ],
+)
+def test_to_tip_raises_after_six_failed_calls(tmp_path, error, wait_s):
+    broker = _AlwaysFailing(make_stream(tmp_path, n=3), error)
+    c, clock = consumer(broker)
+    t0 = clock()
+    with pytest.raises(type(error)):
+        list(c.to_tip())
+    assert broker.calls == 6  # bounded: a task fails instead of hanging
+    assert clock() - t0 == 5 * wait_s  # backoff before each retry
+
+
+def test_slice_closed_early_reports_yielded_sequence_only(tmp_path):
+    """A slice stopped after its first row reports that row to its gen=N
+    sidecar and writes no closed/ marker, although the consumer already saw
+    the closed shard's null NextShardIterator; a full read records it."""
+    import json
+    import os
+
+    from messikinesisprovider_spark.sources.kinesis_partitioned import (
+        KinesisShardSlice,
+        _read_shard_slice,
+    )
+
+    client = make_stream(tmp_path, n=10)
+    client.split_shard(StreamName="s", ShardToSplit="0", NewStartingHashKey=_MID)
+    meta = str(tmp_path / "meta")
+    opts = _source_options(tmp_path, metadatadir=meta)
+
+    def report(*parts):
+        with open(os.path.join(meta, *parts)) as f:
+            return json.load(f)["last_seq"]
+
+    rows = _read_shard_slice(KinesisShardSlice("0", "", 3, opts))
+    next(rows)
+    rows.close()
+    assert report("gen=3", "shard-0.json") == kinesis_sim.format_sequence(0)
+    assert not os.path.exists(os.path.join(meta, "closed"))
+
+    assert len(list(_read_shard_slice(KinesisShardSlice("0", "", 4, opts)))) == 10
+    assert report("gen=4", "shard-0.json") == kinesis_sim.format_sequence(9)
+    assert report("closed", "shard-0.json") == kinesis_sim.format_sequence(9)
+
+
+# -- readBetweenOffsets: the simple reader's failure-recovery replay ---------
+
+
+def _replay(tmp_path, start_seq, end_seq):
+    rows = kinesis_source.KinesisStreamReader(_source_options(tmp_path)).readBetweenOffsets(
+        {"0": start_seq}, {"0": end_seq}
+    )
+    col = kinesis_source._COLS.index("external_id")
+    return [r[col] for r in rows]
+
+
+def test_replay_between_offsets(tmp_path):
+    make_stream(tmp_path, n=10)
+    got = _replay(tmp_path, "000000000002", "000000000006")
+    assert got == ["ext3", "ext4", "ext5", "ext6"]
+
+
+def test_replay_survives_rate_limit(tmp_path):
+    client = make_stream(tmp_path, n=10)
+    client.trigger_rate_limit_on_next_get_records()
+    got = _replay(tmp_path, "000000000002", "000000000006")
+    assert got == ["ext3", "ext4", "ext5", "ext6"]  # F4 backoff, then the rows
+
+
+def test_replay_from_starting_position(tmp_path):
+    make_stream(tmp_path, n=10)
+    assert _replay(tmp_path, "", "000000000003") == ["ext0", "ext1", "ext2", "ext3"]
+
+
 # -- Spark streaming source --------------------------------------------------
 
 
@@ -392,7 +530,7 @@ def _reader(spark, statedir, mode="simple", meta=None, **opts):
         .option("pollintervalms", "10")
     )
     if mode == "partitioned":
-        r = r.option("reader", "partitioned").option("metadatadir", meta)
+        r = r.option("metadatadir", meta)
     for k, v in opts.items():
         r = r.option(k, v)
     return r.load()

@@ -228,9 +228,7 @@ def test_spark_reader_delivers_across_split(spark, tmp_path, reader_mode):
             .option("pollintervalms", "10")
         )
         if reader_mode == "partitioned":
-            r = r.option("reader", "partitioned").option(
-                "metadatadir", str(tmp_path / "meta")
-            )
+            r = r.option("metadatadir", str(tmp_path / "meta"))
         q = (
             r.load()
             .writeStream.format("parquet")
@@ -289,7 +287,7 @@ def test_spark_reader_parent_records_precede_children(spark, tmp_path, reader_mo
         .option("pollintervalms", "10")
     )
     if reader_mode == "partitioned":
-        r = r.option("reader", "partitioned").option("metadatadir", str(tmp_path / "m2"))
+        r = r.option("metadatadir", str(tmp_path / "m2"))
 
     batches: list[set[str]] = []  # cumulative external_ids after each drain
     for _ in range(5):

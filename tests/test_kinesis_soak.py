@@ -61,7 +61,6 @@ def test_partitioned_reader_soak_32_shards_restart(spark, tmp_path):
             )
             .option("statedir", broker)
             .option("pollintervalms", "10")
-            .option("reader", "partitioned")
             .option("metadatadir", meta)
             .load()
             .writeStream.format("parquet")

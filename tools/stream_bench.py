@@ -83,7 +83,6 @@ def main():
             "messikinesisprovider_spark.sources.kinesis_sim:client_from_options",
         )
         .option("statedir", statedir)
-        .option("reader", "partitioned")
         .option("metadatadir", os.path.join(workdir, "meta"))
         .option("maxrecordspershard", "10000")
         .option("pollintervalms", "10")
