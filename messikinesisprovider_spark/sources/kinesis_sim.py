@@ -29,6 +29,13 @@ Sequence numbers are zero-padded 12-digit strings (KinesisShardStream.java:
 30-33); AT_TIMESTAMP resolves to the first record whose arrival is >= the
 timestamp, falling through to the next sequence (= LATEST) when none is
 (KinesisShardStream.java:77-87).
+
+Shard files are JSONL, one ``{"seq", "partition_key", "data" (base64),
+"arrival_ms"}`` object per line. Each process keeps a decoded copy of the
+shards it reads (``_read_shard``): a record is JSON-parsed, base64-decoded
+and given its arrival ``datetime`` once, when its line is first read, and an
+append is read by parsing only the appended lines. GetRecords pages are
+built from that copy, so serving a page costs one dict per record.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ import hashlib
 import json
 import os
 import time
+from collections import OrderedDict
 from datetime import datetime, timezone
 
 from ..schema import format_sequence
@@ -74,10 +82,38 @@ class ValidationError(SimulatorError):
 MAX_HASH_KEY = (1 << 128) - 1
 
 
-# Per-process parsed-shard cache for _read_shard (size-validated; see its
-# docstring). Process-local by construction, like the client itself.
-_SHARD_PARSE_CACHE: dict[str, tuple[int, list[dict]]] = {}
+# Per-process decoded-shard cache for _read_shard, least recently used first:
+# path -> (key, last_line, records). `key` is the file's (st_ino, st_size,
+# st_mtime_ns) when it was parsed, `last_line` the bytes of its last line
+# (ending at byte offset st_size), and each record a
+# (seq, partition_key, data, arrival_ms, arrival_ts) tuple. Process-local by
+# construction, like the client itself.
+_SHARD_PARSE_CACHE: OrderedDict[str, tuple[tuple, bytes, list[tuple]]] = OrderedDict()
 _SHARD_PARSE_CACHE_MAX = 16
+
+
+def _parse_lines(buf: bytes) -> tuple[list[tuple], bytes, bool]:
+    """Decoded records of the JSONL lines in `buf`, the bytes of its last
+    line, and whether parsing stopped at a line that is not a JSON object —
+    a partial trailing line that a concurrent writer is still appending."""
+    records: list[tuple] = []
+    lines = buf.splitlines(keepends=True)
+    for line in lines:
+        if not line.strip():
+            continue
+        try:
+            r = json.loads(line)
+        except ValueError:
+            return records, b"", True
+        ms = r["arrival_ms"]
+        records.append((
+            r["seq"],
+            r["partition_key"],
+            base64.b64decode(r["data"]),
+            ms,
+            datetime.fromtimestamp(ms / 1000, tz=timezone.utc),
+        ))
+    return records, lines[-1] if lines else b"", False
 
 
 def _route(open_ranges: list[tuple[int, int, str]], pk: str) -> str:
@@ -148,8 +184,8 @@ class FakeKinesisClient:
     def _store_sidecar(self, path: str, obj) -> None:
         """Plain (non-atomic) write for derived caches like the .count
         sidecar: writers hold the flock, and readers (_load tolerates
-        ValueError; _shard_count validates size) treat a torn file as a
-        miss and recount — so the tempfile+os.replace dance (the dominant
+        ValueError; _shard_count validates size and mtime) treat a torn file
+        as a miss and recount — so the tempfile+os.replace dance (the dominant
         cost of the publish path: 1.5 s of a 4.2 s 100k-record publish)
         buys nothing here. Authoritative state (streams.json, faults,
         reshard metadata) keeps the atomic _store."""
@@ -351,68 +387,78 @@ class FakeKinesisClient:
         }
 
     # -- data plane --------------------------------------------------------
-    def _read_shard(self, stream: str, shard_id: str) -> list[dict]:
-        """Parsed shard records, through a size-validated cache.
+    def _read_shard(self, stream: str, shard_id: str) -> list[tuple]:
+        """Decoded shard records ``(seq, partition_key, data, arrival_ms,
+        arrival_ts)``, through the per-process LRU ``_SHARD_PARSE_CACHE``.
 
-        get_records pages a shard Limit records at a time, so a consumer
-        draining an n-record shard used to re-parse the whole JSONL n/Limit
-        times — O(n²) characters parsed, and the dominant cost of the
-        end-to-end reshard/merge pipelines (measured 10.6 s of a 17 s run at
-        sf0.1). Stronger contract than the ``_shard_count`` sidecar: the
-        cache is keyed on (size, mtime_ns), so both appends (put_records or
-        a test poking the file directly) AND same-size in-place rewrites
-        invalidate it; callers never mutate the returned rows (get_records
-        builds fresh dicts per page). A torn read — a concurrent writer
-        appending between our stat and our read, leaving a partial final
-        JSON line — surfaces as ValueError; treated as a miss (returns the
-        complete-line prefix without caching, so the next call re-reads).
+        get_records pages a shard Limit records at a time and `tail` reads a
+        shard after every append, so each record is parsed, base64-decoded
+        and given its arrival datetime once per process, not once per page.
+        An entry is current while the file's (st_ino, st_size, st_mtime_ns)
+        is unchanged. When the file has grown on the same inode and the
+        cached last line still ends at the cached size, only the bytes after
+        it are parsed and appended to the entry; a truncation, a same-size
+        rewrite, a new inode or a changed last line parses the file again.
+        Callers never mutate the returned list or its tuples (get_records
+        builds fresh dicts per page). A torn read — a writer appending
+        without the lock between our stat and our read, leaving a partial
+        final JSON line — returns the complete-line prefix without caching
+        it, so the next call reads the lines again.
         """
         path = self._shard_path(stream, shard_id)
         try:
             st = os.stat(path)
         except OSError:
             return []
-        key = (st.st_size, st.st_mtime_ns)
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
         hit = _SHARD_PARSE_CACHE.get(path)
         if hit is not None and hit[0] == key:
-            return hit[1]
-        records: list[dict] = []
-        torn = False
+            _SHARD_PARSE_CACHE.move_to_end(path)
+            return hit[2]
         try:
-            with open(path) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    try:
-                        records.append(json.loads(line))
-                    except ValueError:
-                        torn = True  # partial trailing line mid-append
-                        break
+            with open(path, "rb") as f:
+                offset, records = 0, []
+                if hit is not None:
+                    (ino, size, _), last = hit[0], hit[1]
+                    if ino == st.st_ino and size < st.st_size:
+                        f.seek(size - len(last))
+                        if f.read(len(last)) == last:
+                            offset, records = size, hit[2]
+                f.seek(offset)
+                buf = f.read(st.st_size - offset)
         except OSError:
             return []
-        if torn:
-            return records  # complete prefix, uncached — next call re-reads
+        new, last, torn = _parse_lines(buf)
+        if torn or len(buf) != st.st_size - offset:
+            return records + new  # complete prefix, uncached — next call re-reads
+        records.extend(new)
+        _SHARD_PARSE_CACHE.pop(path, None)
         while len(_SHARD_PARSE_CACHE) >= _SHARD_PARSE_CACHE_MAX:
-            _SHARD_PARSE_CACHE.pop(next(iter(_SHARD_PARSE_CACHE)))
-        _SHARD_PARSE_CACHE[path] = (key, records)
+            _SHARD_PARSE_CACHE.popitem(last=False)
+        _SHARD_PARSE_CACHE[path] = (key, last, records)
         return records
 
     def _shard_count(self, stream: str, shard_id: str) -> int:
-        """Record count of a shard in O(1) via a size-validated sidecar.
+        """Record count of a shard in O(1) via a validated sidecar.
 
         put_records only needs the count (for the next sequence number), and
         re-parsing the whole JSONL per call made publishing O(n²). The
-        sidecar caches (count, file_size); any out-of-band append (tests
-        write shard files directly to simulate resharding) changes the file
-        size and forces a recount, so the cache can never go silently stale.
+        sidecar caches (count, file size, mtime_ns); any out-of-band write
+        (tests write shard files directly to simulate resharding), a
+        same-length rewrite included, changes one of the two and forces a
+        recount, so the cache can never go silently stale.
         """
         path = self._shard_path(stream, shard_id)
         try:
-            size = os.path.getsize(path)
+            st = os.stat(path)
         except OSError:
             return 0
         meta = self._load(path + ".count", None)
-        if isinstance(meta, dict) and meta.get("size") == size:
+        if (
+            isinstance(meta, dict)
+            and meta.get("size") == st.st_size
+            and meta.get("mtime_ns") == st.st_mtime_ns
+        ):
             return int(meta["count"])
         with open(path) as f:
             return sum(1 for line in f if line.strip())
@@ -456,9 +502,10 @@ class FakeKinesisClient:
             path = self._shard_path(StreamName, sid)
             with open(path, "a") as f:
                 f.write("".join(json.dumps(r) + "\n" for r in rows))
-            self._store_sidecar(
-                path + ".count", {"count": counts[sid], "size": os.path.getsize(path)}
-            )
+            st = os.stat(path)
+            self._store_sidecar(path + ".count", {
+                "count": counts[sid], "size": st.st_size, "mtime_ns": st.st_mtime_ns,
+            })
         return {"FailedRecordCount": 0, "Records": results}
 
     def get_shard_iterator(
@@ -511,7 +558,7 @@ class FakeKinesisClient:
                 ts_ms = int(float(ts) * 1000)
             seq = len(records)  # falls through to LATEST if none at/after ts
             for i, r in enumerate(records):
-                if r["arrival_ms"] >= ts_ms:
+                if r[3] >= ts_ms:
                     seq = i
                     break
         else:
@@ -540,17 +587,15 @@ class FakeKinesisClient:
         records = self._read_shard(stream, shard_id)
         start = int(seq_s)
         page = records[start : start + Limit]
-        next_seq = int(page[-1]["seq"]) + 1 if page else start
+        next_seq = int(page[-1][0]) + 1 if page else start
         out = [
             {
-                "SequenceNumber": r["seq"],
-                "PartitionKey": r["partition_key"],
-                "Data": base64.b64decode(r["data"]),
-                "ApproximateArrivalTimestamp": datetime.fromtimestamp(
-                    r["arrival_ms"] / 1000, tz=timezone.utc
-                ),
+                "SequenceNumber": seq,
+                "PartitionKey": pk,
+                "Data": data,
+                "ApproximateArrivalTimestamp": arrival_ts,
             }
-            for r in page
+            for seq, pk, data, _, arrival_ts in page
         ]
         # Closed shard fully drained → NextShardIterator null (the AWS
         # end-of-shard signal consumers fail over to the children on).

@@ -210,8 +210,10 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
         no shard makes progress). A parent absent from the listing was
         trimmed by retention and cannot block (the KCL rule). Drained
         parents stay listed but cost nothing: their consumers are
-        shard_ended no-ops."""
-        from .kinesis import list_shards
+        shard_ended no-ops. A shard whose GetRecords has failed more than
+        MAX_FAILED_CALLS times in a row fails the batch with the last error,
+        the bound `to_tip()` puts on the replay and the partitioned slices."""
+        from .kinesis import MAX_FAILED_CALLS, list_shards
 
         shards = list_shards(self.client(), self.stream_name)
         present = {s["ShardId"] for s in shards}
@@ -241,6 +243,8 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
                 last = start.get(sid, "")
                 c = self._consumer(sid, last)
                 c.fill_once()  # respects F1 space, F3 pacing, F4/F5 backoff
+                if c.failed_calls > MAX_FAILED_CALLS:
+                    raise c.last_error
                 for msg in c.drain():
                     rows.append(_to_row(msg, self.topic))
                     last = msg["provider"]["sequence_number"]

@@ -415,8 +415,8 @@ class _AlwaysFailing:
     def __init__(self, client, error):
         self.client, self.error, self.calls = client, error, 0
 
-    def get_shard_iterator(self, **kw):
-        return self.client.get_shard_iterator(**kw)
+    def __getattr__(self, name):
+        return getattr(self.client, name)
 
     def get_records(self, **kw):
         self.calls += 1
@@ -438,6 +438,24 @@ def test_to_tip_raises_after_six_failed_calls(tmp_path, error, wait_s):
         list(c.to_tip())
     assert broker.calls == 6  # bounded: a task fails instead of hanging
     assert clock() - t0 == 5 * wait_s  # backoff before each retry
+
+
+def test_microbatch_raises_after_six_failed_calls(tmp_path):
+    """The simple reader's microbatch fails once a shard's GetRecords has
+    failed more than MAX_FAILED_CALLS times in a row, instead of returning
+    empty batches at an unchanged offset forever."""
+    import time
+
+    broker = _AlwaysFailing(make_stream(tmp_path, n=3), RuntimeError("broker down"))
+    reader = kinesis_source.KinesisStreamReader(_source_options(tmp_path, pollintervalms="1"))
+    reader._client = broker
+    start = reader.initialOffset()
+    with pytest.raises(RuntimeError, match="broker down"):
+        for _ in range(100):
+            rows, end = reader.read(start)
+            assert list(rows) == [] and end == start
+            time.sleep(0.002)  # past the 1 ms F6 retry delay
+    assert broker.calls == 6
 
 
 def test_slice_closed_early_reports_yielded_sequence_only(tmp_path):
